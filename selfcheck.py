@@ -22,11 +22,19 @@ for p in glob.glob(f"{sf}/*.parquet"):
     con.execute(f"CREATE VIEW {name} AS SELECT * FROM '{p}'")
 
 oracles = json.load(open(f"{out}/oracle_sql.json"))
+# graft.Verify records each query that raised: name -> {class, message}
+fail_path = f"{out}/_failures.json"
+failures = json.load(open(fail_path)) if os.path.exists(fail_path) else {}
 n_pass = n_fail = 0
 for name, sql in sorted(oracles.items()):
     spark_dir = f"{out}/{name}"
     if not os.path.isdir(spark_dir):
-        print(f"FAIL {name}: no spark output dir"); n_fail += 1; continue
+        if name in failures:
+            f = failures[name]
+            print(f"FAIL {name}: {f['class']}: {f['message']}")
+        else:
+            print(f"FAIL {name}: no spark output dir")
+        n_fail += 1; continue
     try:
         got = pd.read_parquet(spark_dir)
         exp = con.sql(sql).df()

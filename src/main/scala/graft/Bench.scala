@@ -359,9 +359,9 @@ object Bench {
     // the shapes whose constants matter at 3× — plus the round's two
     // new iterative operators: directed PageRank (dangling aggregate
     // per round) and the incremental-CC merge (delivery-sized
-    // contract). q221's tier evidence is the composed_v2/v3 sections,
-    // which time the identical DAG — a tier row would re-run the whole
-    // pipeline a third time for no new information.
+    // contract). q221's tier evidence is the composed_v4 section,
+    // which times a superset DAG — a tier row would re-run the whole
+    // pipeline again for no new information.
     "q211_sorted_neighborhood", "q212_selfbleu_redundancy",
     "q218_jl_projection", "q220_bipartite_projection",
     "q222_pagerank_directed", "q223_incremental_components",
@@ -414,7 +414,7 @@ object Bench {
     * actually originate) plus q210 as the cross-round anchor, at the
     * base pass count, with composed_v4 (the newest pipeline, whose DAG
     * subsumes v2/v3's stages) as the single composed section. The full
-    * 48-row / 5-pass / 4-section adjudication tier stays available
+    * 48-row / 5-pass adjudication tier stays available
     * under SPARK_GRAFT_TIER=full for the builder's own runs. */
   private val slimTierQueries = Seq(
     "q210_pagerank", "q222_pagerank_directed", "q224_hits",
@@ -491,8 +491,10 @@ object Bench {
   /** Tallies shuffle/spill bytes across completed stages — the scale
     * signal of the composed-pipeline rehearsal (wall time alone hides a
     * stage that quietly doubled its shuffle). Listener delivery is
-    * async; [[drain]] gives the bus a moment before reading. */
-  private class ShuffleTally extends org.apache.spark.scheduler.SparkListener {
+    * async; [[drain]] blocks until the bus has delivered every queued
+    * event before reading. */
+  private class ShuffleTally(spark: SparkSession)
+      extends org.apache.spark.scheduler.SparkListener {
     @volatile var write = 0L
     @volatile var read = 0L
     @volatile var peakStageWrite = 0L
@@ -508,7 +510,7 @@ object Bench {
         spill += tm.diskBytesSpilled
       }
     }
-    def drain(): Unit = Thread.sleep(500)
+    def drain(): Unit = org.apache.spark.sql.GraftSqlBridge.drainListenerBus(spark)
   }
 
   /** Cumulative executor task time (ms) across all completed tasks —
@@ -546,7 +548,7 @@ object Bench {
     * representative. */
   private def scaleShuffleJson(spark: SparkSession, scaleDir: String,
       named: Seq[(String, (SparkSession, String) => DataFrame)]): String = {
-    val tally = new ShuffleTally
+    val tally = new ShuffleTally(spark)
     spark.sparkContext.addSparkListener(tally)
     val mb = 1024.0 * 1024.0
     try {
@@ -565,113 +567,6 @@ object Bench {
     } finally spark.sparkContext.removeSparkListener(tally)
   }
 
-  /** End-to-end rehearsal of the composed corpus pipeline
-    * (ops/CorpusPipeline: q76 → q99 → q62 → q126 → q88 as ONE job) on
-    * the scale tier: the per-stage plans are individually audited, but
-    * stage-boundary costs only exist in the composed DAG — this records
-    * the wall time and the shuffle envelope a real run would pay. */
-  private def composedSection(spark: SparkSession, scaleDir: String,
-      passes: Int): String = {
-    val tally = new ShuffleTally
-    spark.sparkContext.addSparkListener(tally)
-    try {
-      val runs = (1 to passes).map { _ =>
-        val t0 = System.nanoTime()
-        graft.ops.CorpusPipeline.build(Tables(spark, scaleDir, "documents"))
-          .write.format("noop").mode("overwrite").save()
-        (System.nanoTime() - t0) / 1e9
-      }
-      tally.drain()
-      val mb = 1024.0 * 1024.0
-      s""","composed":{"stages":"q76>q99>q62>q126>q88>q132",""" +
-        s""""runs":[${runs.map(fmt).mkString(",")}],""" +
-        s""""shuffle_write_mb":${fmt(tally.write / mb / passes)},""" +
-        s""""shuffle_read_mb":${fmt(tally.read / mb / passes)},""" +
-        s""""peak_stage_shuffle_write_mb":${fmt(tally.peakStageWrite / mb)},""" +
-        s""""disk_spill_mb":${fmt(tally.spill / mb / passes)}}"""
-    } catch { case scala.util.control.NonFatal(e) =>
-      s""","composed":{"error":"${e.getClass.getSimpleName}"}"""
-    } finally spark.sparkContext.removeSparkListener(tally)
-  }
-
-  /** Same rehearsal for the round-9 v2 pipeline (normalized dedup →
-    * quality/sample → containment → line scrub → cluster → keep →
-    * grouped split → chunk → per-split shards) PLUS its two standing
-    * audits (split-leakage tabulation, per-source PSI drift gate) —
-    * the full promotion gate a production corpus run executes. Build
-    * and audits are timed as one pass: they share the document-level
-    * DAG, and a real run pays both. */
-  private def composedV2Section(spark: SparkSession, scaleDir: String,
-      passes: Int): String = {
-    val tally = new ShuffleTally
-    spark.sparkContext.addSparkListener(tally)
-    try {
-      val runs = (1 to passes).map { _ =>
-        val t0 = System.nanoTime()
-        val docs = Tables(spark, scaleDir, "documents")
-        // the document-level DAG (stages 1–7) materializes ONCE and
-        // feeds build and audits — the production shape; timing
-        // build(docs) + audits(docs) separately would pay stages 1–7
-        // twice and double-count the doc pipeline in the reported time
-        val st = graft.ops.CorpusPipelineV2.stages(docs, checkpoint = true)
-        val kept = graft.ops.Iterate.cut(st.kept)
-        graft.ops.CorpusPipelineV2.buildFromKept(kept)
-          .write.format("noop").mode("overwrite").save()
-        graft.ops.CorpusPipelineV2.auditsFromKept(docs, kept)
-          .write.format("noop").mode("overwrite").save()
-        val dt = (System.nanoTime() - t0) / 1e9
-        st.releaseBarriers()
-        graft.ops.Iterate.release(kept)
-        dt
-      }
-      tally.drain()
-      val mb = 1024.0 * 1024.0
-      s""","composed_v2":{"stages":"q149>q76>q143>q99>q62>q126>q150>q88>q132+audits(q151,q159)",""" +
-        s""""runs":[${runs.map(fmt).mkString(",")}],""" +
-        s""""shuffle_write_mb":${fmt(tally.write / mb / passes)},""" +
-        s""""shuffle_read_mb":${fmt(tally.read / mb / passes)},""" +
-        s""""peak_stage_shuffle_write_mb":${fmt(tally.peakStageWrite / mb)},""" +
-        s""""disk_spill_mb":${fmt(tally.spill / mb / passes)}}"""
-    } catch { case scala.util.control.NonFatal(e) =>
-      s""","composed_v2":{"error":"${e.getClass.getSimpleName}"}"""
-    } finally spark.sparkContext.removeSparkListener(tally)
-  }
-
-  /** Rehearsal of the v3 (rank-gated) pipeline: PageRank source
-    * authority gates the tail before the nine v2 stages; build + the
-    * three-gate audit frame (leakage, PSI, rank_gate) time as one
-    * pass. Blocks sweep per pass — the gate and the stage barriers are
-    * per-run scratch. */
-  private def composedV3Section(spark: SparkSession, scaleDir: String,
-      passes: Int): String = {
-    val tally = new ShuffleTally
-    spark.sparkContext.addSparkListener(tally)
-    try {
-      val runs = (1 to passes).map { _ =>
-        val before = persistedIds(spark)
-        val t0 = System.nanoTime()
-        val docs = Tables(spark, scaleDir, "documents")
-        val (chunks, audit) =
-          graft.ops.CorpusPipelineV2.buildAndAuditRankGated(docs)
-        chunks.write.format("noop").mode("overwrite").save()
-        audit.write.format("noop").mode("overwrite").save()
-        val dt = (System.nanoTime() - t0) / 1e9
-        sweepBlocks(spark, before)
-        dt
-      }
-      tally.drain()
-      val mb = 1024.0 * 1024.0
-      s""","composed_v3":{"stages":"rank_gate(q210)>q149>q76>q143>q99>q62>q126>q150>q88>q132+audits(q151,q159,rank_gate)",""" +
-        s""""runs":[${runs.map(fmt).mkString(",")}],""" +
-        s""""shuffle_write_mb":${fmt(tally.write / mb / passes)},""" +
-        s""""shuffle_read_mb":${fmt(tally.read / mb / passes)},""" +
-        s""""peak_stage_shuffle_write_mb":${fmt(tally.peakStageWrite / mb)},""" +
-        s""""disk_spill_mb":${fmt(tally.spill / mb / passes)}}"""
-    } catch { case scala.util.control.NonFatal(e) =>
-      s""","composed_v3":{"error":"${e.getClass.getSimpleName}"}"""
-    } finally spark.sparkContext.removeSparkListener(tally)
-  }
-
   /** Rehearsal of the v4 (rank + tier gated) pipeline: ONE source
     * affinity graph feeds PageRank authority AND seed-clamped label
     * propagation; both host-sized verdict frames gate docs in one
@@ -679,7 +574,7 @@ object Bench {
     * frame (leakage, PSI, rank_gate, tier_gate) time as one pass. */
   private def composedV4Section(spark: SparkSession, scaleDir: String,
       passes: Int): String = {
-    val tally = new ShuffleTally
+    val tally = new ShuffleTally(spark)
     spark.sparkContext.addSparkListener(tally)
     try {
       val runs = (1 to passes).map { _ =>
@@ -948,7 +843,7 @@ object Bench {
     // cost, so only the tier shows data-dependent regressions (and
     // q106's memory-pressure envelope). SPARK_GRAFT_TIER selects the
     // row set: "slim" (default — fits the driver's budget),
-    // "full" (the 48-row / 5-pass / 4-composed-section adjudication
+    // "full" (the 48-row / 5-pass adjudication
     // run), "off". Every PHASE is guarded independently (r11 verdict
     // #2): one fatal error late in the tier must discard only its own
     // phase, never the already-measured rows — partial results ship
@@ -1083,8 +978,8 @@ object Bench {
         // or half-written scaleDir wastes wall and mints misleading
         // error entries
         if (built) {
-          // v4's DAG subsumes the v2 stages and the v3 rank gate; the
-          // slim run times it alone, the full run times all four.
+          // v4's DAG subsumes the v2 stages and the v3 rank gate, so
+          // it is the only composed section.
           // SLIM runs time ONE v4 pass (r17 verdict #10: the driver's
           // slim run tripped its 2700 s budget AT phase_composed_v4
           // two rounds running, so the section kept getting skipped —
@@ -1093,14 +988,6 @@ object Bench {
           phase("composed_v4") {
             composed ++= composedV4Section(spark, scaleDir,
               if (tierMode == "full") passes else 1) }
-          if (tierMode == "full") {
-            phase("composed") {
-              composed ++= composedSection(spark, scaleDir, passes) }
-            phase("composed_v2") {
-              composed ++= composedV2Section(spark, scaleDir, passes) }
-            phase("composed_v3") {
-              composed ++= composedV3Section(spark, scaleDir, passes) }
-          }
         }
         val head = Seq(
           s""""dir":"${graft.io.Sink.jsonEscape(scaleDir)}"""",

@@ -67,8 +67,9 @@ object Pipeline {
         .withColumnRenamed("label", "time")
   }
 
-  /** Execute: materialize the task frame into the DRS layout, append
-    * status, return the output directory. Failures are recorded, not
+  /** Execute: materialize the task frame into the task slice's
+    * partition of the DRS layout, append status, return the variable's
+    * output directory. Failures are recorded, not
     * thrown — per-task isolation like the reference's pool
     * (mopper.py:416-433). */
   def run(spark: SparkSession, raw: DataFrame, task: Task, root: String,
@@ -80,7 +81,10 @@ object Pipeline {
       val obs = org.apache.spark.sql.Observation(s"sink_${task.id}")
       val out = frame(raw, task, keys)
         .observe(obs, count(lit(1)).as("rows"))
-      val dir = Sink.writeDrs(out, root, task.key, task.attrs)
+      // each planner slice owns its own `period` partition of the
+      // variable's directory, so slices never overwrite each other
+      val dir = Sink.writeDrs(out, root, task.key,
+        Sink.periodOf(task.tstartUs, task.tendUs), task.attrs)
       val n = obs.get("rows").asInstanceOf[Long]
       Sink.appendStatus(spark, s"$root/_status", task.id, "processed", n)
       Right(dir)

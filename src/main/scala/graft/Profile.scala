@@ -71,7 +71,7 @@ object Profile {
       SparkEntry.queries(n)(spark, sfDir)
         .write.format("noop").mode("overwrite").save()
       val dt = (System.nanoTime() - q0) / 1e9
-      Thread.sleep(500) // let async listener events drain
+      org.apache.spark.sql.GraftSqlBridge.drainListenerBus(spark)
       spark.sparkContext.removeSparkListener(listener)
       println(f"[total] $n ${dt}%.2fs")
     }

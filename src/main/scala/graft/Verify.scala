@@ -28,6 +28,9 @@ object Verify {
     val fParts = nameFilter.map(_.split(',').toSeq.filter(_.nonEmpty))
     val selected = SparkEntry.queries
       .filter { case (name, _) => fParts.forall(_.exists(name.contains)) }
+    // query name -> (exception class, message): a failed query has no
+    // output dir, and _failures.json says why
+    val failures = scala.collection.mutable.TreeMap.empty[String, (String, String)]
     selected.foreach { case (name, fn) =>
       // queries are self-contained: release the checkpoint blocks each
       // one created, so a 220-query dump doesn't accumulate
@@ -37,28 +40,25 @@ object Verify {
         .parquet(s"$outDir/$name")
       catch { case e: Throwable =>
         System.err.println(s"[verify] $name failed: ${e.getMessage}")
+        failures(name) = (e.getClass.getName, String.valueOf(e.getMessage))
       }
       spark.sparkContext.getPersistentRDDs.foreach { case (id, rdd) =>
         if (!before.contains(id)) rdd.unpersist(blocking = false)
       }
     }
-    // JSON string escape: backslash, quote, and ALL control chars (<0x20)
-    // — a tab or CR in builder-authored SQL would otherwise make the
-    // driver's json.load fail and silently zero the round's correctness.
-    def q(s: String): String = "\"" + s.flatMap {
-      case '"'  => "\\\""
-      case '\\' => "\\\\"
-      case '\n' => "\\n"
-      case '\r' => "\\r"
-      case '\t' => "\\t"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    } + "\""
+    // every JSON string goes through Sink.jsonEscape — a tab or CR in
+    // an oracle's SQL would otherwise make a reader's json.load fail
+    def q(s: String): String = "\"" + graft.io.Sink.jsonEscape(s) + "\""
+    Files.writeString(Paths.get(s"$outDir/_failures.json"),
+      failures.map { case (k, (cls, msg)) =>
+        s"${q(k)}: {${q("class")}: ${q(cls)}, ${q("message")}: ${q(msg)}}"
+      }.mkString("{", ",", "}"))
     val json = SparkEntry.oracleSql
       .filter { case (k, _) => fParts.forall(_.exists(k.contains)) }
       .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
     spark.stop()
-    println(s"[verify] done: ${selected.size} queries -> $outDir")
+    println(s"[verify] done: ${selected.size} queries, " +
+      s"${failures.size} failed -> $outDir")
   }
 }

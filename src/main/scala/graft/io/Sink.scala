@@ -13,9 +13,10 @@ import java.nio.file.{Files, Paths}
   * attributes (units, cell_methods, positive) ride in a JSON sidecar the
   * way CMOR tables carry them.
   *
-  * Scale: `partitionBy` on the DRS keys gives partition-pruned reads of
-  * any (variable, time-chunk) slice; per-file row caps keep file sizes
-  * near the planner's target without a global sort.
+  * Scale: the DRS path names the variable and a `period=<start>-<end>`
+  * partition names each planner slice, so a read of any (variable,
+  * time-chunk) slice is partition-pruned; per-file row caps keep file
+  * sizes near the planner's target without a global sort.
   */
 object Sink {
 
@@ -54,9 +55,21 @@ object Sink {
       case "day"                  => 8
       case _                      => 12
     }
-    val s = start.filter(_.isDigit).take(prec)
-    val e = end.filter(_.isDigit).take(prec)
-    s"${k.variable}_${k.table}_${k.source}_${k.experiment}_${k.member}_${k.grid}_$s-$e.parquet"
+    s"${k.variable}_${k.table}_${k.source}_${k.experiment}_${k.member}_${k.grid}_" +
+      s"${stamp(start, prec)}-${stamp(end, prec)}.parquet"
+  }
+
+  private def stamp(ts: String, prec: Int): String =
+    ts.filter(_.isDigit).take(prec)
+
+  /** The `period` partition value of one planner slice `[startUs,
+    * endUs)` (epoch microseconds, UTC): both ends at [[fileName]]'s
+    * 12-digit sub-daily precision, so every slice of a variable gets
+    * its own partition whatever the variable's output frequency. */
+  def periodOf(startUs: Long, endUs: Long): String = {
+    def iso(us: Long) = java.time.Instant.EPOCH
+      .plus(us, java.time.temporal.ChronoUnit.MICROS).toString
+    s"${stamp(iso(startUs), 12)}-${stamp(iso(endUs), 12)}"
   }
 
   /** Vertical-direction inference (mop_utils.py:776-786): an explicit
@@ -72,15 +85,22 @@ object Sink {
       else None
     }
 
-  /** Write one output variable: partitioned parquet under the DRS path
-    * plus a JSON metadata sidecar with the CMOR-style attributes.
-    * Flux-like variables get their `positive` attribute inferred from
-    * the standard name when the catalog didn't set one. */
-  def writeDrs(df: DataFrame, root: String, k: DrsKey,
+  /** Write one planner slice of an output variable: parquet in the
+    * slice's `period=<period>` partition ([[periodOf]]) under the DRS
+    * path, plus a JSON metadata sidecar with the CMOR-style attributes
+    * at the variable level. Only that partition is replaced (dynamic
+    * partition overwrite): the variable's other slices and the sidecar
+    * survive, and re-running a slice replaces just its rows. Flux-like
+    * variables get their `positive` attribute inferred from the
+    * standard name when the catalog didn't set one. */
+  def writeDrs(df: DataFrame, root: String, k: DrsKey, period: String,
       attrs0: Map[String, String], maxRecordsPerFile: Long = 5000000L): String = {
     val dir = s"$root/${drsPath(k)}"
-    df.write.mode(SaveMode.Overwrite)
+    df.withColumn("period", org.apache.spark.sql.functions.lit(period))
+      .write.mode(SaveMode.Overwrite)
+      .option("partitionOverwriteMode", "dynamic")
       .option("maxRecordsPerFile", maxRecordsPerFile)
+      .partitionBy("period")
       .parquet(dir)
     // when neither the config nor the standard name yields a canonical
     // direction, pass attrs through untouched — a non-canonical

@@ -4,9 +4,9 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-/** The round-8-generation composed corpus pipeline — [[CorpusPipeline]]
-  * extended with the stages a production pretraining run added since
-  * that DAG was frozen (r8 verdict, Next #5):
+/** The composed corpus-construction pipeline: the individually
+  * oracle-verified corpus stages chained as ONE declarative job, in the
+  * order a production pretraining run applies them:
   *
   *   normalized dedup (q149)  fuzzy-exact collapse: lowercase /
   *                            punctuation-strip / whitespace-collapse,
@@ -39,10 +39,10 @@ import org.apache.spark.sql.functions._
   * Stage boundaries are DataFrame hand-offs with executor-side
   * materialization barriers at the three fan-out points (see [[cp]]) —
   * no driver round-trips, no loops, no collect. The scale tier times
-  * the end-to-end cost (BENCH_DETAIL "composed_v2"). Every shuffle
+  * the end-to-end cost (BENCH_DETAIL "composed_v4"). Every shuffle
   * keys on doc/hash/cluster/(split, len) ids; full text crosses the
   * wire only where a stage's semantics need the text itself (line
-  * reassembly, chunking), exactly as in v1.
+  * reassembly, chunking).
   *
   * Input `docs`: (doc_id, text, source, n_chars) — the documents
   * table. [[build]] output: one row per chunk,
@@ -76,15 +76,7 @@ object CorpusPipelineV2 {
     * stage-7 output every downstream consumer reads. */
   final case class V2Stages(uniq: DataFrame, sampled: DataFrame,
       unquoted: DataFrame, cleaned: DataFrame, clustered: DataFrame,
-      kept: DataFrame) {
-    /** Release the internal stage barriers' executor blocks. Safe only
-      * once every consumer of `kept` has materialized (e.g. after the
-      * caller checkpointed `kept` and finished its downstream jobs) —
-      * the checkpoint-discipline contract from [[Iterate]]. No-op when
-      * the stages were built with `checkpoint = false`. */
-    def releaseBarriers(): Unit =
-      Seq(sampled, unquoted, cleaned).foreach(Iterate.release)
-  }
+      kept: DataFrame)
 
   /** Stages 1–7: the document-level pipeline, shared by [[build]] and
     * [[audits]]. Output: (doc_id, source, clean_text, n_chars, split)
@@ -185,8 +177,8 @@ object CorpusPipelineV2 {
     buildFromKept(cp(keptWithSplit(docs, checkpoint), checkpoint))
 
   /** Stages 8–9 over an already-materialized [[keptWithSplit]] frame —
-    * callers that also run [[auditsFromKept]] (Bench's composed_v2
-    * rehearsal, the q221 summary) materialize the document-level DAG
+    * callers that also run [[auditsFromKept]] (the gated compositions,
+    * the q221 summary) materialize the document-level DAG
     * ONCE and feed both, instead of paying stages 1–7 twice. */
   def buildFromKept(kept: DataFrame): DataFrame = {
     val chunks = kept

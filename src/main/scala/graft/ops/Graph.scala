@@ -1435,7 +1435,8 @@ object Graph {
     * self-row-free frame IS [[louvainMove]] (the unweighted operator
     * delegates here). Same conflict-free acceptance, same
     * decimal(38,0)/HUGEINT exact gains, same strict-increase
-    * guarantee — now in weighted Q ([[modularityWeighted]]). */
+    * guarantee — now in weighted Q ([[modularityWeighted]]). A
+    * `comm` node with no edge row passes through with its label. */
   def louvainMoveWeighted(edges: DataFrame, comm: DataFrame): DataFrame = {
     val spark = edges.sparkSession
     import spark.implicits._
@@ -1455,17 +1456,51 @@ object Graph {
     * `deg` MUST be exactly the degree frame of `edges` — passing
     * anything else changes every gain. */
   def louvainMoveWeighted(edges: DataFrame, deg: DataFrame,
-      comm: DataFrame): DataFrame = {
+      comm: DataFrame): DataFrame =
+    louvainSweep(edges, deg, comm, 0L, 1L, 1L)(acceptConflictFree)
+
+  /** Conflict-free acceptance for [[louvainMoveWeighted]]: a proposal
+    * must rank first, by (g desc, node asc), within BOTH communities it
+    * touches (see [[louvainMove]] — disjointness makes the accepted
+    * gains exactly additive). `prop(node, c0, c, k, g)` → accepted
+    * `node`s. */
+  private def acceptConflictFree(prop: DataFrame): DataFrame = {
+    val spark = prop.sparkSession
+    import spark.implicits._
+    val touch = prop.select($"node", $"c0".as("cmty"), $"g")
+      .unionByName(prop.select($"node", $"c".as("cmty"), $"g"))
+    val w = org.apache.spark.sql.expressions.Window
+      .partitionBy($"cmty").orderBy($"g".desc, $"node".asc)
+    touch.select($"node", row_number().over(w).as("rk"))
+      .groupBy($"node").agg(max($"rk").as("mrk"))
+      .filter($"mrk" === 1).select($"node")
+  }
+
+  /** The proposal half of one Louvain sweep, shared by both acceptance
+    * rules: every `comm` node's stay score, its single best
+    * strictly-improving move `prop(node, c0, c, k, g)`, and — once
+    * `accept` has picked the accepted proposals' nodes — the new
+    * (node, label). `deg` and `stot` attach via left joins with
+    * 0-defaults, so a node with no edge row passes through with its
+    * label (k = 0 ⟹ s_stay = 0 and no proposal exists). `minGainDen`
+    * = 0 adds no threshold and γ = 1/1 emits no γ expression, so
+    * [[louvainMoveWeighted]]'s plan carries neither. */
+  private def louvainSweep(edges: DataFrame, deg: DataFrame,
+      comm: DataFrame, minGainDen: Long, gammaNum: Long, gammaDen: Long)(
+      accept: DataFrame => DataFrame): DataFrame = {
     val spark = edges.sparkSession
     import spark.implicits._
     def dec(c: Column): Column = c.cast("decimal(38,0)")
+    // γ-scaling helpers: identity at 1 so the γ=1 plan is bit-identical
+    def gN(c: Column): Column = if (gammaNum == 1L) c else c * lit(gammaNum)
+    def gD(c: Column): Column = if (gammaDen == 1L) c else c * lit(gammaDen)
     // No internal eager checkpoints (r11 verdict #4): the sweep is
     // read-once internally — every repeated subtree (deg ×3, kic ×2,
     // info ×2, prop ×3) is canonically identical, so the single
     // materializing action reuses its exchanges instead of paying
     // ~6 barrier jobs of fixed stage+codegen cost per sweep (the
     // barriers were ~9% of the whole r11 bench wall across q235/q242).
-    // Callers pass materialized `edges`/`comm` (both q235 and q242
+    // Callers pass materialized `edges`/`comm` (q235, q242 and q244
     // checkpoint them) and materialize the RETURNED frame, which is
     // the only cross-sweep lineage cut the loop needs.
     val e = edges
@@ -1478,26 +1513,26 @@ object Graph {
     // contracted frame it keeps a node's internal mass out of both
     // k_own and every candidate, where it would otherwise double)
     val kic = e.filter($"src" =!= $"dst")
-      .join(cm.select($"node".as("dst"), $"label".as("c")),
-        Seq("dst"))
+      .join(cm.select($"node".as("dst"), $"label".as("c")), Seq("dst"))
       .groupBy($"src".as("node"), $"c").agg(sum($"w").as("kic"))
     val info = cm.select($"node", $"label".as("c0"))
-      .join(deg, Seq("node"))
+      .join(deg, Seq("node"), "left")
       .join(stot.select($"label".as("c0"), $"stot".as("stot0")),
-        Seq("c0"))
+        Seq("c0"), "left")
       .join(kic.select($"node", $"c".as("c0"), $"kic".as("k_own")),
         Seq("node", "c0"), "left")
       .crossJoin(broadcast(m2row))
-      .select($"node", $"c0", $"k",
-        (dec($"m2") * coalesce($"k_own", lit(0L)) -
-          dec($"stot0" - $"k") * $"k").as("s_stay"))
+      .select($"node", $"c0", coalesce($"k", lit(0L)).as("k"),
+        (gD(dec($"m2") * coalesce($"k_own", lit(0L))) -
+          gN(dec(coalesce($"stot0", lit(0L)) - coalesce($"k", lit(0L))) *
+            coalesce($"k", lit(0L)))).as("s_stay"))
     val cand = kic
       .join(info.select($"node", $"c0", $"k", $"s_stay"), Seq("node"))
       .filter($"c" =!= $"c0")
       .join(stot.select($"label".as("c"), $"stot"), Seq("c"))
       .crossJoin(broadcast(m2row))
-      .select($"node", $"c0", $"c",
-        (dec($"m2") * $"kic" - dec($"stot") * $"k").as("s_move"),
+      .select($"node", $"c0", $"c", $"k", $"m2",
+        (gD(dec($"m2") * $"kic") - gN(dec($"stot") * $"k")).as("s_move"),
         $"s_stay")
     // each node's single best strictly-improving proposal — aggregate
     // argmin over (s_move desc via exact decimal negation, c asc), not
@@ -1505,19 +1540,12 @@ object Graph {
     // sweep's single biggest CPU sink from singleton starts)
     val prop = Relational.argMinPerGroup(cand, Seq($"node"),
         struct((-$"s_move").as("o1"), $"c".as("o2")))
-      .filter($"s_move" > $"s_stay")
-      .select($"node", $"c0", $"c", ($"s_move" - $"s_stay").as("g"))
-    // conflict-free acceptance: a proposal must rank first within
-    // BOTH communities it touches (see doc — disjointness makes the
-    // accepted gains exactly additive)
-    val touch = prop.select($"node", $"c0".as("cmty"), $"g")
-      .unionByName(prop.select($"node", $"c".as("cmty"), $"g"))
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy($"cmty").orderBy($"g".desc, $"node".asc)
-    val acc = touch.select($"node", row_number().over(w).as("rk"))
-      .groupBy($"node").agg(max($"rk").as("mrk"))
-      .filter($"mrk" === 1).select($"node")
-    info.join(prop.join(acc, Seq("node"), "left_semi")
+      .filter($"s_move" > $"s_stay" && (if (minGainDen > 0L)
+          ($"s_move" - $"s_stay") * lit(minGainDen) > gD(dec($"m2"))
+        else lit(true)))
+      .select($"node", $"c0", $"c", $"k",
+        ($"s_move" - $"s_stay").as("g"))
+    info.join(prop.join(accept(prop), Seq("node"), "left_semi")
         .select($"node", $"c".as("newc")), Seq("node"), "left")
       .select($"node", coalesce($"newc", $"c0").as("label"))
   }
@@ -1527,59 +1555,84 @@ object Graph {
     * `$comm(node, label)` CTEs; exposes `wlvout$sfx(node, label)`.
     * Scores in HUGEINT, self-rows excluded from k_{i,c}. */
   def louvainMoveWeightedSql(edges: String, comm: String,
-      sfx: String): String = s"""
-      wlvdeg$sfx AS MATERIALIZED (
+      sfx: String): String =
+    louvainSweepSql("wlv", edges, comm, sfx, 0L, 1L, 1L)(
+      conflictFreeSql("wlv", sfx))
+
+  /** Conflict-free acceptance CTEs (the SQL form of
+    * [[acceptConflictFree]]) over `${p}prop$sfx`; defines
+    * `${p}acc$sfx(node)`. */
+  private def conflictFreeSql(p: String, sfx: String): String = s"""
+      ${p}touch$sfx AS (
+        SELECT node, c0 AS cmty, g FROM ${p}prop$sfx
+        UNION ALL
+        SELECT node, c, g FROM ${p}prop$sfx),
+      ${p}acc$sfx AS (
+        SELECT node FROM (
+          SELECT node, ROW_NUMBER() OVER (PARTITION BY cmty
+                   ORDER BY g DESC, node) AS rk
+          FROM ${p}touch$sfx)
+        GROUP BY node HAVING MAX(rk) = 1)"""
+
+  /** The CTE chain of one oracle sweep, shared by both twins — the SQL
+    * form of [[louvainSweep]]: `${p}deg` … `${p}prop(node, c0, c, k, g)`
+    * CTEs under the caller's prefix `p`, then the caller's acceptance
+    * CTEs (which must define `${p}acc$sfx(node)`), then
+    * `${p}out$sfx(node, label)`. Isolated comm nodes pass through via
+    * left joins with 0-defaults; the γ factors are emitted only when
+    * ≠ 1. */
+  private def louvainSweepSql(p: String, edges: String, comm: String,
+      sfx: String, minGainDen: Long, gammaNum: Long, gammaDen: Long)(
+      acceptCtes: String): String = {
+    def gN(s: String): String = if (gammaNum == 1L) s else s"$s * $gammaNum"
+    def gD(s: String): String = if (gammaDen == 1L) s else s"$s * $gammaDen"
+    s"""
+      ${p}deg$sfx AS MATERIALIZED (
         SELECT src AS node, CAST(SUM(w) AS BIGINT) AS k
         FROM $edges GROUP BY src),
-      wlvm2$sfx AS (
-        SELECT CAST(SUM(k) AS HUGEINT) AS m2 FROM wlvdeg$sfx),
-      wlvstot$sfx AS (
+      ${p}m2$sfx AS (
+        SELECT CAST(SUM(k) AS HUGEINT) AS m2 FROM ${p}deg$sfx),
+      ${p}stot$sfx AS (
         SELECT c.label, CAST(SUM(d.k) AS BIGINT) AS stot
-        FROM $comm c JOIN wlvdeg$sfx d ON c.node = d.node
+        FROM $comm c JOIN ${p}deg$sfx d ON c.node = d.node
         GROUP BY c.label),
-      wlvkic$sfx AS MATERIALIZED (
+      ${p}kic$sfx AS MATERIALIZED (
         SELECT e.src AS node, c.label AS cc,
                CAST(SUM(e.w) AS BIGINT) AS kic
         FROM $edges e JOIN $comm c ON e.dst = c.node
         WHERE e.src <> e.dst
         GROUP BY 1, 2),
-      wlvinfo$sfx AS MATERIALIZED (
-        SELECT c.node, c.label AS c0, d.k,
-          m.m2 * COALESCE(ko.kic, 0)
-            - CAST(s.stot - d.k AS HUGEINT) * d.k AS s_stay
+      ${p}info$sfx AS MATERIALIZED (
+        SELECT c.node, c.label AS c0, COALESCE(d.k, 0) AS k,
+          ${gD("m.m2 * COALESCE(ko.kic, 0)")}
+            - ${gN("CAST(COALESCE(s.stot, 0) - COALESCE(d.k, 0) AS HUGEINT) * COALESCE(d.k, 0)")} AS s_stay
         FROM $comm c
-        JOIN wlvdeg$sfx d ON c.node = d.node
-        JOIN wlvstot$sfx s ON c.label = s.label
-        LEFT JOIN wlvkic$sfx ko ON ko.node = c.node AND ko.cc = c.label,
-        wlvm2$sfx m),
-      wlvprop$sfx AS MATERIALIZED (
-        SELECT node, c0, c, s_move - s_stay AS g FROM (
-          SELECT kc.node, i.c0, kc.cc AS c,
-            m.m2 * kc.kic - CAST(s.stot AS HUGEINT) * i.k AS s_move,
+        LEFT JOIN ${p}deg$sfx d ON c.node = d.node
+        LEFT JOIN ${p}stot$sfx s ON c.label = s.label
+        LEFT JOIN ${p}kic$sfx ko ON ko.node = c.node AND ko.cc = c.label,
+        ${p}m2$sfx m),
+      ${p}prop$sfx AS MATERIALIZED (
+        SELECT node, c0, c, k, s_move - s_stay AS g FROM (
+          SELECT kc.node, i.c0, kc.cc AS c, i.k, m.m2,
+            ${gD("m.m2 * kc.kic")} - ${gN("CAST(s.stot AS HUGEINT) * i.k")} AS s_move,
             i.s_stay,
             ROW_NUMBER() OVER (PARTITION BY kc.node
-              ORDER BY m.m2 * kc.kic - CAST(s.stot AS HUGEINT) * i.k
+              ORDER BY ${gD("m.m2 * kc.kic")} - ${gN("CAST(s.stot AS HUGEINT) * i.k")}
                 DESC, kc.cc) AS rk
-          FROM wlvkic$sfx kc
-          JOIN wlvinfo$sfx i ON kc.node = i.node AND kc.cc <> i.c0
-          JOIN wlvstot$sfx s ON kc.cc = s.label, wlvm2$sfx m)
-        WHERE rk = 1 AND s_move > s_stay),
-      wlvtouch$sfx AS (
-        SELECT node, c0 AS cmty, g FROM wlvprop$sfx
-        UNION ALL
-        SELECT node, c, g FROM wlvprop$sfx),
-      wlvacc$sfx AS (
-        SELECT node FROM (
-          SELECT node, ROW_NUMBER() OVER (PARTITION BY cmty
-                   ORDER BY g DESC, node) AS rk
-          FROM wlvtouch$sfx)
-        GROUP BY node HAVING MAX(rk) = 1),
-      wlvout$sfx AS (
+          FROM ${p}kic$sfx kc
+          JOIN ${p}info$sfx i ON kc.node = i.node AND kc.cc <> i.c0
+          JOIN ${p}stot$sfx s ON kc.cc = s.label, ${p}m2$sfx m)
+        WHERE rk = 1 AND s_move > s_stay${
+          if (minGainDen > 0L)
+            s"\n          AND (s_move - s_stay) * $minGainDen > ${gD("m2")}"
+          else ""}),$acceptCtes,
+      ${p}out$sfx AS (
         SELECT i.node,
           CASE WHEN a.node IS NOT NULL THEN p.c ELSE i.c0 END AS label
-        FROM wlvinfo$sfx i
-        LEFT JOIN wlvprop$sfx p ON i.node = p.node
-        LEFT JOIN wlvacc$sfx a ON i.node = a.node)"""
+        FROM ${p}info$sfx i
+        LEFT JOIN ${p}prop$sfx p ON i.node = p.node
+        LEFT JOIN ${p}acc$sfx a ON i.node = a.node)"""
+  }
 
   /** [[louvainMoveWeighted]] with PREFIX-BOUNDED BATCH ACCEPTANCE —
     * the sweep that actually CONVERGES in a handful of rounds (q244).
@@ -1681,52 +1734,23 @@ object Graph {
   def louvainMoveBatch(edges: DataFrame, deg: DataFrame, comm: DataFrame,
       minGainDen: Long, gammaNum: Long,
       gammaDen: Long): DataFrame = {
-    val spark = edges.sparkSession
-    import spark.implicits._
     require(gammaNum > 0L && gammaDen > 0L,
       s"louvainMoveBatch: gamma must be positive ($gammaNum/$gammaDen)")
+    louvainSweep(edges, deg, comm, minGainDen, gammaNum, gammaDen)(
+      acceptBatch(_, gammaNum))
+  }
+
+  /** Prefix-bounded batch acceptance for [[louvainMoveBatch]]: per
+    * community, rank by (g desc, node), fix the direction from the
+    * rank-1 row, and charge each candidate the degree mass ranked ahead
+    * of it (same mode); accept iff both rows match their community's
+    * mode and g > γ·k·K_prev. `prop(node, c0, c, k, g)` → accepted
+    * `node`s. */
+  private def acceptBatch(prop: DataFrame, gammaNum: Long): DataFrame = {
+    val spark = prop.sparkSession
+    import spark.implicits._
     def dec(c: Column): Column = c.cast("decimal(38,0)")
-    // γ-scaling helpers: identity at 1 so the γ=1 plan is bit-identical
     def gN(c: Column): Column = if (gammaNum == 1L) c else c * lit(gammaNum)
-    def gD(c: Column): Column = if (gammaDen == 1L) c else c * lit(gammaDen)
-    val e = edges
-    val cm = comm
-    val m2row = deg.agg(sum($"k").as("m2"))
-    val stot = cm.join(deg, Seq("node"))
-      .groupBy($"label").agg(sum($"k").as("stot"))
-    val kic = e.filter($"src" =!= $"dst")
-      .join(cm.select($"node".as("dst"), $"label".as("c")), Seq("dst"))
-      .groupBy($"src".as("node"), $"c").agg(sum($"w").as("kic"))
-    val info = cm.select($"node", $"label".as("c0"))
-      .join(deg, Seq("node"), "left")
-      .join(stot.select($"label".as("c0"), $"stot".as("stot0")),
-        Seq("c0"), "left")
-      .join(kic.select($"node", $"c".as("c0"), $"kic".as("k_own")),
-        Seq("node", "c0"), "left")
-      .crossJoin(broadcast(m2row))
-      .select($"node", $"c0", coalesce($"k", lit(0L)).as("k"),
-        (gD(dec($"m2") * coalesce($"k_own", lit(0L))) -
-          gN(dec(coalesce($"stot0", lit(0L)) - coalesce($"k", lit(0L))) *
-            coalesce($"k", lit(0L)))).as("s_stay"))
-    val cand = kic
-      .join(info.select($"node", $"c0", $"k", $"s_stay"), Seq("node"))
-      .filter($"c" =!= $"c0")
-      .join(stot.select($"label".as("c"), $"stot"), Seq("c"))
-      .crossJoin(broadcast(m2row))
-      .select($"node", $"c0", $"c", $"k", $"m2",
-        (gD(dec($"m2") * $"kic") - gN(dec($"stot") * $"k")).as("s_move"),
-        $"s_stay")
-    // aggregate argmin (r18) — see [[louvainMoveWeighted]]'s prop
-    val prop = Relational.argMinPerGroup(cand, Seq($"node"),
-        struct((-$"s_move").as("o1"), $"c".as("o2")))
-      .filter($"s_move" > $"s_stay" && (if (minGainDen > 0L)
-          ($"s_move" - $"s_stay") * lit(minGainDen) > gD(dec($"m2"))
-        else lit(true)))
-      .select($"node", $"c0", $"c", $"k",
-        ($"s_move" - $"s_stay").as("g"))
-    // batch acceptance: per community, rank by (g desc, node), fix the
-    // direction from the rank-1 row, and charge each candidate the
-    // degree mass ranked ahead of it (same mode)
     val touch = prop
       .select($"node", $"c0".as("cmty"), lit("out").as("mode"), $"g", $"k")
       .unionByName(prop
@@ -1739,14 +1763,11 @@ object Graph {
       coalesce(sum(when($"mode" === $"m1", $"k")).over(
           w.rowsBetween(org.apache.spark.sql.expressions.Window
             .unboundedPreceding, -1)), lit(0L)).as("kprev"))
-    val acc = kp.groupBy($"node", $"g", $"k")
+    kp.groupBy($"node", $"g", $"k")
       .agg(sum(when($"mode" === $"m1", 1L).otherwise(0L)).as("okrows"),
         sum($"kprev").as("kprevsum"))
       .filter($"okrows" === 2 && $"g" > gN(dec($"k") * $"kprevsum"))
       .select($"node")
-    info.join(prop.join(acc, Seq("node"), "left_semi")
-        .select($"node", $"c".as("newc")), Seq("node"), "left")
-      .select($"node", coalesce($"newc", $"c0").as("label"))
   }
 
   /** Oracle twin of [[louvainMoveBatch]] over caller-defined
@@ -1763,47 +1784,8 @@ object Graph {
     require(gammaNum > 0L && gammaDen > 0L,
       s"louvainMoveBatchSql: gamma must be positive ($gammaNum/$gammaDen)")
     def gN(s: String): String = if (gammaNum == 1L) s else s"$s * $gammaNum"
-    def gD(s: String): String = if (gammaDen == 1L) s else s"$s * $gammaDen"
-    s"""
-      blvdeg$sfx AS MATERIALIZED (
-        SELECT src AS node, CAST(SUM(w) AS BIGINT) AS k
-        FROM $edges GROUP BY src),
-      blvm2$sfx AS (
-        SELECT CAST(SUM(k) AS HUGEINT) AS m2 FROM blvdeg$sfx),
-      blvstot$sfx AS (
-        SELECT c.label, CAST(SUM(d.k) AS BIGINT) AS stot
-        FROM $comm c JOIN blvdeg$sfx d ON c.node = d.node
-        GROUP BY c.label),
-      blvkic$sfx AS MATERIALIZED (
-        SELECT e.src AS node, c.label AS cc,
-               CAST(SUM(e.w) AS BIGINT) AS kic
-        FROM $edges e JOIN $comm c ON e.dst = c.node
-        WHERE e.src <> e.dst
-        GROUP BY 1, 2),
-      blvinfo$sfx AS MATERIALIZED (
-        SELECT c.node, c.label AS c0, COALESCE(d.k, 0) AS k,
-          ${gD("m.m2 * COALESCE(ko.kic, 0)")}
-            - ${gN("CAST(COALESCE(s.stot, 0) - COALESCE(d.k, 0) AS HUGEINT) * COALESCE(d.k, 0)")} AS s_stay
-        FROM $comm c
-        LEFT JOIN blvdeg$sfx d ON c.node = d.node
-        LEFT JOIN blvstot$sfx s ON c.label = s.label
-        LEFT JOIN blvkic$sfx ko ON ko.node = c.node AND ko.cc = c.label,
-        blvm2$sfx m),
-      blvprop$sfx AS MATERIALIZED (
-        SELECT node, c0, c, k, s_move - s_stay AS g FROM (
-          SELECT kc.node, i.c0, kc.cc AS c, i.k, m.m2,
-            ${gD("m.m2 * kc.kic")} - ${gN("CAST(s.stot AS HUGEINT) * i.k")} AS s_move,
-            i.s_stay,
-            ROW_NUMBER() OVER (PARTITION BY kc.node
-              ORDER BY ${gD("m.m2 * kc.kic")} - ${gN("CAST(s.stot AS HUGEINT) * i.k")}
-                DESC, kc.cc) AS rk
-          FROM blvkic$sfx kc
-          JOIN blvinfo$sfx i ON kc.node = i.node AND kc.cc <> i.c0
-          JOIN blvstot$sfx s ON kc.cc = s.label, blvm2$sfx m)
-        WHERE rk = 1 AND s_move > s_stay${
-          if (minGainDen > 0L)
-            s"\n          AND (s_move - s_stay) * $minGainDen > ${gD("m2")}"
-          else ""}),
+    louvainSweepSql("blv", edges, comm, sfx, minGainDen, gammaNum,
+        gammaDen)(s"""
       blvtouch$sfx AS (
         SELECT node, c0 AS cmty, 'out' AS mode, g, k FROM blvprop$sfx
         UNION ALL
@@ -1824,13 +1806,7 @@ object Graph {
         SELECT node FROM blvkp$sfx
         GROUP BY node, g, k
         HAVING SUM(CASE WHEN mode = m1 THEN 1 ELSE 0 END) = 2
-           AND g > ${gN("CAST(k AS HUGEINT) * SUM(kprev)")}),
-      blvout$sfx AS (
-        SELECT i.node,
-          CASE WHEN a.node IS NOT NULL THEN p.c ELSE i.c0 END AS label
-        FROM blvinfo$sfx i
-        LEFT JOIN blvprop$sfx p ON i.node = p.node
-        LEFT JOIN blvacc$sfx a ON i.node = a.node)"""
+           AND g > ${gN("CAST(k AS HUGEINT) * SUM(kprev)")})""")
   }
 
   /** The full Louvain loop TO CONVERGENCE (Blondel '08, iterated) —
@@ -1982,55 +1958,13 @@ object Graph {
     * and `$comm(node, label)` CTEs; exposes `lvout$sfx(node, label)`.
     * Scores in HUGEINT — exact, matching the engine's decimal(38,0).
     * The suffix lets one WITH chain apply several sweeps (q235 chains
-    * them: sweep k reads `lvout{k-1}` as its community CTE). */
+    * them: sweep k reads `lvout{k-1}` as its community CTE). The
+    * weighted twin's chain over `ed` with w ≡ 1, as [[louvainMove]]
+    * delegates to [[louvainMoveWeighted]]. */
   def louvainMoveSql(comm: String, sfx: String = ""): String = s"""
-      lvdeg$sfx AS MATERIALIZED (SELECT src AS node, CAST(COUNT(*) AS BIGINT) AS k
-                FROM ed GROUP BY src),
-      lvm2$sfx AS (SELECT CAST(SUM(k) AS HUGEINT) AS m2 FROM lvdeg$sfx),
-      lvstot$sfx AS (
-        SELECT c.label, CAST(SUM(d.k) AS BIGINT) AS stot
-        FROM $comm c JOIN lvdeg$sfx d ON c.node = d.node GROUP BY c.label),
-      lvkic$sfx AS MATERIALIZED (
-        SELECT e.src AS node, c.label AS cc,
-               CAST(COUNT(*) AS BIGINT) AS kic
-        FROM ed e JOIN $comm c ON e.dst = c.node GROUP BY 1, 2),
-      lvinfo$sfx AS MATERIALIZED (
-        SELECT c.node, c.label AS c0, d.k,
-          m.m2 * COALESCE(ko.kic, 0)
-            - CAST(s.stot - d.k AS HUGEINT) * d.k AS s_stay
-        FROM $comm c
-        JOIN lvdeg$sfx d ON c.node = d.node
-        JOIN lvstot$sfx s ON c.label = s.label
-        LEFT JOIN lvkic$sfx ko ON ko.node = c.node AND ko.cc = c.label,
-        lvm2$sfx m),
-      lvprop$sfx AS MATERIALIZED (
-        SELECT node, c0, c, s_move - s_stay AS g FROM (
-          SELECT kc.node, i.c0, kc.cc AS c,
-            m.m2 * kc.kic - CAST(s.stot AS HUGEINT) * i.k AS s_move,
-            i.s_stay,
-            ROW_NUMBER() OVER (PARTITION BY kc.node
-              ORDER BY m.m2 * kc.kic - CAST(s.stot AS HUGEINT) * i.k
-                DESC, kc.cc) AS rk
-          FROM lvkic$sfx kc
-          JOIN lvinfo$sfx i ON kc.node = i.node AND kc.cc <> i.c0
-          JOIN lvstot$sfx s ON kc.cc = s.label, lvm2$sfx m)
-        WHERE rk = 1 AND s_move > s_stay),
-      lvtouch$sfx AS (
-        SELECT node, c0 AS cmty, g FROM lvprop$sfx
-        UNION ALL
-        SELECT node, c, g FROM lvprop$sfx),
-      lvacc$sfx AS (
-        SELECT node FROM (
-          SELECT node, ROW_NUMBER() OVER (PARTITION BY cmty
-                   ORDER BY g DESC, node) AS rk
-          FROM lvtouch$sfx)
-        GROUP BY node HAVING MAX(rk) = 1),
-      lvout$sfx AS (
-        SELECT i.node,
-          CASE WHEN a.node IS NOT NULL THEN p.c ELSE i.c0 END AS label
-        FROM lvinfo$sfx i
-        LEFT JOIN lvprop$sfx p ON i.node = p.node
-        LEFT JOIN lvacc$sfx a ON i.node = a.node)"""
+      lved$sfx AS (SELECT src, dst, CAST(1 AS BIGINT) AS w FROM ed),""" +
+    louvainSweepSql("lv", s"lved$sfx", comm, sfx, 0L, 1L, 1L)(
+      conflictFreeSql("lv", sfx))
 
   /** Contract a partitioned graph to its community-level super-graph
     * — the Louvain LEVEL BOUNDARY (Blondel '08 §2 phase 2): every

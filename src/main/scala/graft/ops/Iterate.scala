@@ -77,45 +77,6 @@ object Iterate {
     org.apache.spark.sql.GraftSqlBridge.measureCheckpointStats(
       df.localCheckpoint(true))
 
-  /** [[cut]] PLUS physical-layout recovery: re-stamps the origin
-    * plan's final output partitioning and ordering onto the checkpoint
-    * (`GraftSqlBridge.restampCheckpoint`). Under AQE a bare
-    * localCheckpoint returns UnknownPartitioning even when the frame
-    * was just hash-partitioned by the loop key, so the next round
-    * re-exchanges already-placed data; with the layout preserved, a
-    * per-round groupBy/join/window on the same key plans NO exchange
-    * over the checkpoint scan (IterateSpec pins the shape).
-    *
-    * OPT-IN, not the default (r18 measured): removing an exchange also
-    * removes a REUSE point — a multi-consumer subtree whose exchange
-    * disappears is recomputed once PER CONSUMER (q242's tagged
-    * modularity pass ran its edge join 5× under a blanket restamp,
-    * 19→26 s). Use this only where the cut frame's key-aligned subtree
-    * has a single consumer per round — per-round rank/distance/label
-    * vectors joined once — and keep plain [[cut]] for frames feeding
-    * fan-out reads. */
-  def cutKeyed(df: DataFrame): DataFrame =
-    org.apache.spark.sql.GraftSqlBridge.restampCheckpoint(
-      df.localCheckpoint(true), df)
-
-  /** [[cut]] with the SENTINEL size stamp — no measured-size stamp,
-    * and the origin estimate is pinned over every broadcast threshold,
-    * so the frame can never flip its downstream joins to per-round
-    * broadcast builds. For WITHIN-ROUND temporaries that feed
-    * data-sized self-joins: q236's per-round `oriented` frame is a
-    * few MB at sf0.1, and r17's measured stamp made its wedge
-    * self-join and triangle left-semi rebuild a broadcast relation
-    * EVERY round — a real 17–21% regression (driver-verified, tight
-    * spreads at 8 and 32 cores) where the clamped estimate had kept
-    * partitioned shuffle joins whose exchanges AQE reuses. Survivor
-    * frames that round k+1 re-reads (rank vectors, label maps, the
-    * peeled edge set) keep [[cut]]'s measured stats — broadcasting
-    * THOSE is the r17 win; it is the read-once-per-round temporary
-    * whose broadcast build cost can never amortize. */
-  def cutLocal(df: DataFrame): DataFrame =
-    org.apache.spark.sql.GraftSqlBridge.sentinelCheckpointStats(
-      df.localCheckpoint(true))
-
   /** One rolling checkpoint slot: `next(df)` eagerly checkpoints `df`
     * (via [[cut]] — see its doc for why loops must strip checkpoint
     * statistics) and releases the slot's previous round. The LAST

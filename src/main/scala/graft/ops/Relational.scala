@@ -36,7 +36,7 @@ object Relational {
     * O(1) — and the map-side partial shrinks the shuffle to one
     * candidate row per (partition, group) (guide §2.3 "aggregate
     * before you shuffle"). Measured 1.25× over the window on the
-    * louvainMove `cand` shape (ProbeArgmin, interleaved A/B,
+    * louvainMove `cand` shape (OPTIMIZATION_r18.md, interleaved A/B,
     * diff rows = 0); the window form had been ~35% of q235's executor
     * CPU (11/31 jstack samples inside GroupedLimitIterator + its
     * feeding sort). Use the window form when the order key cannot be

@@ -51,23 +51,6 @@ object GraftSqlBridge {
       case _ => df
     }
 
-  /** Stamp the sentinel size UNCONDITIONALLY — `Iterate.cutLocal`'s
-    * backend. Where [[clampCheckpointStats]] only reins in compounded
-    * estimates (a small origin estimate rides through and can still
-    * static-broadcast), this pins the frame OVER every broadcast/skew
-    * threshold regardless: a within-round temporary that feeds a
-    * data-sized self-join keeps its partitioned shuffle join even
-    * when its origin estimate (derived from measured upstream cuts)
-    * looks like a few MB. r16's cut behaved exactly like this for
-    * loop temporaries — their estimates arrived pre-compounded — and
-    * q236's r17 regression tracked the change. */
-  def sentinelCheckpointStats(df: DataFrame): DataFrame =
-    df.queryExecution.logical match {
-      case lr: org.apache.spark.sql.execution.LogicalRDD =>
-        rebuildWithSize(df, lr, MaxCheckpointSizeEstimate)
-      case _ => df
-    }
-
   /** Replace an EAGERLY-materialized checkpoint's size estimate with
     * its MEASURED storage footprint (r17 optimization round, guide
     * §3.1: "size estimates are often badly wrong — pick the join
@@ -94,81 +77,6 @@ object GraftSqlBridge {
         }
       case _ => df
     }
-
-  /** [[measureCheckpointStats]] PLUS physical-layout recovery (r18,
-    * guide §2.4 "remove shuffles outright"): re-stamp the checkpoint's
-    * LogicalRDD with the ORIGIN plan's final output partitioning and
-    * ordering, which `Dataset.localCheckpoint` loses under AQE — the
-    * executed plan is an `AdaptiveSparkPlanExec` whose default
-    * `outputPartitioning` is Unknown, so every eager cut of an
-    * already-hash-partitioned frame (the common case: a loop frame
-    * whose last operator was a join or aggregation on the loop key)
-    * came back `UnknownPartitioning` and the NEXT round re-exchanged
-    * data that was already laid out correctly. The checkpoint RDD is
-    * `executedPlan.execute().map(_.copy())` — partition boundaries are
-    * exactly the executed plan's — so stamping its final partitioning
-    * is truthful by construction. Only layouts that downstream
-    * `EnsureRequirements` can actually rely on are stamped
-    * ([[vettedPartitioning]]): hash/range/single with every reference
-    * still in the checkpoint's output and the partition count
-    * matching; anything else keeps Unknown. Ordering re-stamps under
-    * the same reference check (sort-merge joins and windows read it).
-    * Scale-independent: this never ADDS an exchange, it only stops
-    * discarding knowledge of one that already ran. */
-  def restampCheckpoint(cp: DataFrame, origin: DataFrame): DataFrame =
-    cp.queryExecution.logical match {
-      case lr: org.apache.spark.sql.execution.LogicalRDD =>
-        val (part, ord) =
-          try {
-            val ep = origin.queryExecution.executedPlan match {
-              case a: org.apache.spark.sql.execution.adaptive
-                  .AdaptiveSparkPlanExec => a.executedPlan
-              case p => p
-            }
-            val out = org.apache.spark.sql.catalyst.expressions
-              .AttributeSet(lr.output)
-            val n = lr.rdd.getNumPartitions
-            (vettedPartitioning(ep.outputPartitioning, out, n),
-              ep.outputOrdering.filter(_.references.subsetOf(out)))
-          } catch {
-            case scala.util.control.NonFatal(_) =>
-              (scala.None, scala.Seq.empty[org.apache.spark.sql.catalyst
-                .expressions.SortOrder])
-          }
-        val sized = measuredRddBytes(cp.sparkSession, lr.rdd)
-          .map(BigInt(_))
-        rebuild(cp, lr, sized, part, ord)
-      case _ => cp
-    }
-
-  /** A partitioning claim the checkpoint scan may truthfully carry:
-    * references all live in the output, partition count matches the
-    * materialized RDD. Collections keep their vetted members. */
-  private def vettedPartitioning(
-      p: org.apache.spark.sql.catalyst.plans.physical.Partitioning,
-      out: org.apache.spark.sql.catalyst.expressions.AttributeSet,
-      n: Int): Option[org.apache.spark.sql.catalyst.plans.physical
-        .Partitioning] = {
-    import org.apache.spark.sql.catalyst.plans.physical._
-    p match {
-      case SinglePartition if n == 1 => scala.Some(SinglePartition)
-      case h: HashPartitioning
-          if h.numPartitions == n && h.references.subsetOf(out) =>
-        scala.Some(h)
-      case c: CoalescedHashPartitioning
-          if c.numPartitions == n && c.references.subsetOf(out) =>
-        scala.Some(c)
-      case r: RangePartitioning
-          if r.numPartitions == n && r.references.subsetOf(out) =>
-        scala.Some(r)
-      case pc: PartitioningCollection =>
-        val kept = pc.partitionings.flatMap(vettedPartitioning(_, out, n))
-        if (kept.isEmpty) scala.None
-        else if (kept.size == 1) scala.Some(kept.head)
-        else scala.Some(PartitioningCollection(kept))
-      case _ => scala.None
-    }
-  }
 
   /** The TRUE persisted footprint of an eagerly-checkpointed RDD, from
     * the block manager MASTER — the synchronous registry every block
@@ -200,32 +108,20 @@ object GraftSqlBridge {
       if (perBlock.size == n && total > 0L) Some(total) else None
     } catch { case scala.util.control.NonFatal(_) => None }
 
+  /** One LogicalRDD rebuild for every size stamp: partitioning,
+    * ordering, rowCount/attributeStats/isRuntime and the origin
+    * constraint set all carry over unchanged; only sizeInBytes moves. */
   private def rebuildWithSize(df: DataFrame,
       lr: org.apache.spark.sql.execution.LogicalRDD,
-      size: BigInt): DataFrame =
-    rebuild(df, lr, scala.Some(size), scala.None, lr.outputOrdering)
-
-  /** One LogicalRDD rebuild for every stat/layout restamp: size
-    * (measured, or the sentinel clamp when absent — the safe default
-    * that never broadcasts), partitioning (vetted, else the node's
-    * existing claim), ordering. rowCount/attributeStats/isRuntime and
-    * the origin constraint set always carry over unchanged. */
-  private def rebuild(df: DataFrame,
-      lr: org.apache.spark.sql.execution.LogicalRDD,
-      size: Option[BigInt],
-      part: Option[org.apache.spark.sql.catalyst.plans.physical
-        .Partitioning],
-      ord: Seq[org.apache.spark.sql.catalyst.expressions.SortOrder])
-      : DataFrame = {
+      size: BigInt): DataFrame = {
     val st = lr.computeStats()
-    val sz = size.getOrElse(st.sizeInBytes.min(MaxCheckpointSizeEstimate))
     ofRows(df.sparkSession,
       new org.apache.spark.sql.execution.LogicalRDD(
-        lr.output, lr.rdd, part.getOrElse(lr.outputPartitioning), ord,
+        lr.output, lr.rdd, lr.outputPartitioning, lr.outputOrdering,
         lr.isStreaming, lr.stream)(
         df.sparkSession.asInstanceOf[classic.SparkSession],
         scala.Some(org.apache.spark.sql.catalyst.plans.logical
-          .Statistics(sizeInBytes = sz,
+          .Statistics(sizeInBytes = size,
             rowCount = st.rowCount,
             attributeStats = st.attributeStats,
             isRuntime = st.isRuntime)),
@@ -233,9 +129,9 @@ object GraftSqlBridge {
   }
 
   /** Block until the listener bus has delivered every queued event —
-    * dev-tool hook (PlanTrace/Profile): reading a listener's capture
-    * right after an action races the async bus; sleeping is the flaky
-    * alternative (r17 ADVICE on Profile's Thread.sleep(500)). */
+    * the hook Bench, Profile and PlanTrace read their listeners
+    * through: reading a listener's capture right after an action races
+    * the async bus, and a fixed sleep only makes the race rarer. */
   def drainListenerBus(spark: SparkSession): Unit =
     spark.sparkContext.listenerBus.waitUntilEmpty()
 

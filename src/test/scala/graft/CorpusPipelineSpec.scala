@@ -1,77 +1,15 @@
 package graft
 
-import graft.ops.{CorpusPipeline, Sampling, TextOps}
 import org.apache.spark.sql.functions._
 
-/** The composed corpus pipeline (q76 → q99 → q62 → q126 → q88 chained
-  * as one job): stage hand-offs are plain DataFrame composition, so
-  * these assert the END-TO-END contract — who survives, what the
-  * chunks look like, and that the composed plan keeps the per-stage
-  * shapes (no cartesian, dedup still an anti join). */
+/** The composed corpus pipeline (CorpusPipelineV2: normalized dedup →
+  * quality/sample → containment → line scrub → cluster → keep →
+  * grouped split → chunk → shard, plus its audit and graph gates):
+  * stage hand-offs are plain DataFrame composition, so these assert
+  * the END-TO-END contract — who survives, what the chunks look like,
+  * and that the composed plan keeps the per-stage shapes. */
 class CorpusPipelineSpec extends SparkSpec {
   import spark.implicits._
-
-  // Docs engineered per stage: `small` dies at the q76 length gate
-  // (< 20 tokens); `twinA`/`twinB` are near-identical (Jaccard ≥ 0.9,
-  // same source+length block) so clustering pairs them and the
-  // quality-keep stage keeps exactly one; `solo` is its own cluster.
-  private def mkDocs = {
-    val words = (1 to 60).map(i => s"tok$i").mkString(" ")
-    Seq(
-      (1L, words + " alpha", "src1"),
-      (2L, words + " omega", "src1"),
-      (3L, "tiny doc", "src1"),
-      (4L, (100 to 170).map(i => s"w$i").mkString(" "), "src2"))
-      .toDF("doc_id", "text", "source")
-      .withColumn("n_chars", length($"text").cast("long"))
-  }
-
-  test("composed pipeline: gates, cluster-keep, and chunk shape hold end-to-end") {
-    val docs = mkDocs
-    val rows = CorpusPipeline.build(docs).collect()
-    val out = rows.map(r => (r.getLong(0), r.getInt(1), r.getInt(2)))
-    // stage 6: every chunk carries a shard in [0, 8), and with fewer
-    // chunks than shards the serpentine first pass keeps them distinct
-    val shards = rows.map(_.getInt(4))
-    assert(shards.forall(s => s >= 0 && s < 8))
-    if (rows.length <= 8) assert(shards.distinct.length == rows.length)
-    // the survivor set must agree with the stage ops run solo: kept by
-    // the quality gates AND inside the deterministic 50% hash sample
-    val sampledKept = Sampling.hashRateSample(
-        docs.join(TextOps.corpusDecisions(docs)
-          .filter($"decision" === "kept").select($"doc_id"), Seq("doc_id")),
-        $"doc_id".cast("string"), num = 500, den = 1000)
-      .select($"doc_id").as[Long].collect().toSet
-    val outDocs = out.map(_._1).toSet
-    assert(outDocs.subsetOf(sampledKept))
-    // the short doc never reaches chunking
-    assert(!outDocs.contains(3L))
-    // near-twins 1 and 2: at most one survives the cluster keep
-    assert(!(outDocs.contains(1L) && outDocs.contains(2L)))
-    // chunk contract: ids contiguous from 0 per doc, length ≤ 32, and
-    // every chunk of a 61-token doc has ceil(61/16) = 4 windows
-    out.groupBy(_._1).foreach { case (_, chunks) =>
-      val ids = chunks.map(_._2).sorted
-      assert(ids.toSeq == (0 until chunks.size).toSeq)
-      assert(chunks.forall(_._3 <= 32))
-    }
-    if (outDocs.exists(Set(1L, 2L))) {
-      val survivor = outDocs.intersect(Set(1L, 2L)).head
-      assert(out.count(_._1 == survivor) == 4)
-    }
-  }
-
-  test("composed plan keeps the per-stage shapes: no cartesian, dedup stays an anti join") {
-    val plan = CorpusPipeline.build(mkDocs).queryExecution
-      .explainString(org.apache.spark.sql.execution.ExplainMode
-        .fromString("formatted"))
-    assert(!plan.contains("CartesianProduct"), plan)
-    // q99's boilerplate scrub must still be the anti join (a lost AQE
-    // hint or join rewrite would surface here before it costs a round)
-    assert(plan.contains("LeftAnti"), plan)
-    // q126's keeper is still a keyed top-1 window, not a self-join
-    assert(plan.contains("WindowGroupLimit") || plan.contains("Window"), plan)
-  }
 
   // ---- v2 (round-9): normalized dedup + containment + grouped split ----
 

@@ -193,54 +193,4 @@ class IterateSpec extends SparkSpec {
     assert(l3 <= 4, s"expected <= 4 live frames, got $l3")
     sweep(before)
   }
-
-  test("cutKeyed preserves hash partitioning: per-round groupBy plans no exchange") {
-    // r18: under AQE, Dataset.localCheckpoint loses the executed
-    // plan's outputPartitioning (AdaptiveSparkPlanExec reports
-    // Unknown), so every loop round re-exchanged a frame that was
-    // already hash-placed on the loop key. cut() re-stamps the vetted
-    // final layout onto the checkpoint's LogicalRDD — pin both the
-    // stamp and the exchange-free downstream plan it buys.
-    import org.apache.spark.sql.execution.LogicalRDD
-    import org.apache.spark.sql.catalyst.plans.physical.HashPartitioning
-    val n = 4
-    val src = spark.range(1000).select(($"id" % 37).as("k"), $"id".as("v"))
-    val cut = Iterate.cutKeyed(src.repartition(n, $"k"))
-    val lr = cut.queryExecution.logical.asInstanceOf[LogicalRDD]
-    assert(lr.outputPartitioning.isInstanceOf[HashPartitioning],
-      s"layout lost: ${lr.outputPartitioning}")
-    assert(lr.outputPartitioning.numPartitions == n)
-    // the win: a groupBy on the stamped key runs in ONE stage
-    val agg = cut.groupBy($"k").agg(sum($"v").as("s"))
-    agg.collect()
-    val plan = agg.queryExecution.executedPlan.toString
-    assert(!plan.contains("Exchange"),
-      s"groupBy over a k-partitioned cut re-exchanged:\n$plan")
-    // and the values are untouched
-    assert(agg.agg(sum($"s")).head().getLong(0) == (0L until 1000L).sum)
-    // a bare localCheckpoint shows the contrast (layout lost)
-    val bare = src.repartition(n, $"k").localCheckpoint(true)
-    val lrBare = bare.queryExecution.logical.asInstanceOf[LogicalRDD]
-    assert(!lrBare.outputPartitioning.isInstanceOf[HashPartitioning],
-      "fixture drift: bare localCheckpoint now keeps partitioning — " +
-        "restampCheckpoint may be obsolete")
-    Iterate.release(cut)
-    Iterate.release(bare)
-  }
-
-  test("cutKeyed stamps only vetted layouts: projected-away keys keep Unknown") {
-    // the restamp must never CLAIM a layout the output cannot express:
-    // if the partition key is projected away before the cut, the
-    // HashPartitioning references dangle and downstream co-partition
-    // reasoning would be wrong — the vet rejects it.
-    import org.apache.spark.sql.execution.LogicalRDD
-    import org.apache.spark.sql.catalyst.plans.physical.HashPartitioning
-    val src = spark.range(100).select(($"id" % 7).as("k"), $"id".as("v"))
-    val cut = Iterate.cutKeyed(src.repartition(4, $"k").select($"v"))
-    val lr = cut.queryExecution.logical.asInstanceOf[LogicalRDD]
-    assert(!lr.outputPartitioning.isInstanceOf[HashPartitioning],
-      s"stamped a dangling layout: ${lr.outputPartitioning}")
-    assert(cut.agg(sum($"v")).head().getLong(0) == (0L until 100L).sum)
-    Iterate.release(cut)
-  }
 }

@@ -175,7 +175,7 @@ class PipelineSpec extends SparkSpec {
     val dir = Files.createTempDirectory("drs").toString
     val out = Sink.writeDrs(df, dir,
       Sink.DrsKey("CMIP6", "ACME", "SPARK1", "histor", "r1i1p1f1",
-        "Amon", "tas", "gn", "v1"),
+        "Amon", "tas", "gn", "v1"), Sink.periodOf(0L, 1L),
       Map("comment" -> "line one\nline two\ttabbed"))
     val sidecar = Files.readString(
       java.nio.file.Paths.get(s"$out/_attrs.json"))
@@ -306,6 +306,51 @@ class PipelineSpec extends SparkSpec {
     // filename stamp precision follows frequency
     val fn = Sink.fileName(task.key, "mon", "19960102030405", "19971112131415")
     assert(fn == "tas_Amon_SPARK1_histor_r1i1p1f1_gn_199601-199711.parquet")
+  }
+
+  test("pipeline slices of one variable land side by side; a re-run replaces only its own") {
+    // three days of hourly rows, planned onto the 1d rung: three slices
+    // of one variable, so one DrsKey and one output directory
+    val day = 86400L * 1000000L
+    val t0 = java.time.Instant.parse("2024-01-01T00:00:00Z").toEpochMilli * 1000L
+    val raw = spark.range(72).select(
+      timestamp_micros(lit(t0) + $"id" * 3600000000L).as("time"),
+      ($"id" * 1.5).as("fld"))
+    val plan = Planner.plan(t0, t0 + 3 * day, mbPerDay = 2.0, maxSizeMb = 2.0)
+    assert(plan.slices.size >= 2, plan)
+    val root = Files.createTempDirectory("graft-slices").toString
+    val key = Sink.DrsKey("CMIP6", "ACME", "SPARK1", "histor", "r1i1p1f1",
+      "E1hr", "tas", "gn", "v1")
+    def run(s: Planner.FileSlice): String = {
+      val task = Pipeline.Task(s"tas_E1hr_${s.index}", Seq("fld"),
+        "var[0]*2", "", "mean", s.startUs, s.endUs, key, Map("units" -> "K"))
+      val res = Pipeline.run(spark, raw, task, root)
+      assert(res.isRight, res)
+      res.toOption.get
+    }
+    val dirs = plan.slices.map(run).distinct
+    assert(dirs.size == 1, dirs)
+    val outDir = dirs.head
+    def slice(s: Planner.FileSlice): Set[(Long, Double)] =
+      spark.read.parquet(outDir)
+        .filter($"period" === Sink.periodOf(s.startUs, s.endUs))
+        .select(graft.ops.TimeEnc.usOf($"time"), $"value")
+        .as[(Long, Double)].collect().toSet
+    // every slice's rows survive the later slices' writes
+    assert(spark.read.parquet(outDir).count() == 72)
+    plan.slices.foreach { s =>
+      val got = slice(s)
+      assert(got.nonEmpty && got.forall { case (us, _) =>
+        us >= s.startUs && us < s.endUs }, s)
+    }
+    assert(plan.slices.map(slice(_).size).sum == 72)
+    // re-running slice 0 replaces only slice 0: same total, slice 1
+    // untouched, and the variable's sidecar still there
+    val before1 = slice(plan.slices(1))
+    run(plan.slices(0))
+    assert(spark.read.parquet(outDir).count() == 72)
+    assert(slice(plan.slices(1)) == before1)
+    assert(Files.exists(java.nio.file.Paths.get(s"$outDir/_attrs.json")))
   }
 
   test("pipeline failure isolation records status instead of throwing") {
