@@ -97,47 +97,6 @@ object Bench {
     (take, tooSlow ++ dropped)
   }
 
-  /** Round-robin timed sweeps through the noop sink (materializes every
-    * output row/column; a count() would let Catalyst prune the measured
-    * projections). Single-shot timing cannot tell a real regression
-    * from a GC/JIT stall on a neighboring query (r3 verdict: 4 phantom
-    * regressions) — interleaving decorrelates a transient host stall
-    * from any one query's samples. Sweep 0 is an UNTIMED warm-up
-    * (discarded): r7's first sweep was host-contaminated (q105 runs
-    * [69.05, 2.47, 0.93]) and with 3 kept passes the outlier sits next
-    * to the median — paying one throwaway sweep keeps a single
-    * disturbed pass out of every reported statistic. */
-  /** Release every persisted RDD a query run created (checkpoint
-    * barriers, iterative slots' final rounds). Queries are
-    * self-contained — no run ever reads another run's blocks — but a
-    * bare localCheckpoint outlives its query, and across 220 queries ×
-    * 4–6 passes the accumulated blocks are executor-storage pressure,
-    * eviction churn, and GC work (the r9 verdict's bimodal-tier-pass
-    * suspect). The sweep runs OUTSIDE the timed region. */
-  /** No-throw: a query that OOM-killed the SparkContext must surface
-    * as that query's -1 row, not as an IllegalStateException from the
-    * cleanup path that then discards every already-measured row (the
-    * r11 scale-section collapse — BENCH_DETAIL shipped one word).
-    * `before = None` (the 'before' snapshot itself failed) makes the
-    * sweep a no-op: guessing an empty before-set would unpersist every
-    * live block, including warm caches that predate the query, and
-    * distort every later pass (r12 advice). */
-  private def sweepBlocks(spark: SparkSession, before: Option[Set[Int]]): Unit =
-    before.foreach { b =>
-      try spark.sparkContext.getPersistentRDDs.foreach { case (id, rdd) =>
-        if (!b.contains(id)) rdd.unpersist(blocking = false)
-      } catch { case scala.util.control.NonFatal(_) => () }
-    }
-
-  /** getPersistentRDDs as an Option: None when the context is stopped
-    * or the read fails — a sentinel that makes [[sweepBlocks]] a no-op
-    * rather than an empty set that would sweep everything. */
-  private def persistedIds(spark: SparkSession): Option[Set[Int]] =
-    try {
-      if (spark.sparkContext.isStopped) None
-      else Some(spark.sparkContext.getPersistentRDDs.keySet.toSet)
-    } catch { case scala.util.control.NonFatal(_) => None }
-
   /** Sum of all collectors' accumulated GC wall time, ms. */
   private def totalGcMs: Long = {
     import scala.jdk.CollectionConverters._
@@ -206,6 +165,16 @@ object Bench {
     if (overBudget(deadlineNs)) { budgetHit.compareAndSet(null, where); true }
     else false
 
+  /** Round-robin timed sweeps through the noop sink (materializes every
+    * output row/column; a count() would let Catalyst prune the measured
+    * projections). Single-shot timing cannot tell a real regression
+    * from a GC/JIT stall on a neighboring query (r3 verdict: 4 phantom
+    * regressions) — interleaving decorrelates a transient host stall
+    * from any one query's samples. Sweep 0 is an UNTIMED warm-up
+    * (discarded): r7's first sweep was host-contaminated (q105 runs
+    * [69.05, 2.47, 0.93]) and with 3 kept passes the outlier sits next
+    * to the median — paying one throwaway sweep keeps a single
+    * disturbed pass out of every reported statistic. */
   private def timePasses(spark: SparkSession, sfDir: String,
       named: Seq[(String, (SparkSession, String) => DataFrame)],
       passes: Int,
@@ -214,10 +183,6 @@ object Bench {
       deadlineNs: Long = 0L,
       tag: String = "")
       : Array[Vector[Double]] = {
-    // provenance for driver-side query telemetry (ADVICE r16): any
-    // convergence counts recorded during these passes belong to THIS
-    // data directory — readers check the stamp before reusing them
-    graft.ops.Graph.convergeDataTag = sfDir
     val runs = Array.fill(named.size)(Vector.empty[Double])
     // warmup=false: the rows just ran (stabilize/widen extras) — their
     // code is JIT'd and their inputs page-cached; paying another
@@ -233,8 +198,8 @@ object Bench {
         // ships with the budget marker instead of dying rc=124
         if (!runs(i).lastOption.contains(-1.0) && // a crash won't un-crash
             !tripBudget(s"pass_p$p", deadlineNs)) {
-          val before = persistedIds(spark)
-          val task0 = taskTally.ms.get()
+          val before = Dev.persistedIds(spark)
+          val task0 = obs.totals.runTimeMs
           val q0 = System.nanoTime()
           // swallow only NonFatal (r12 advice): an interrupted pass
           // restores the flag and stops the run; a driver OOM must end
@@ -249,10 +214,10 @@ object Bench {
           val dt = (System.nanoTime() - q0) / 1e9
           // drain the async bus OUTSIDE the timed region, then read
           // the query's executor-task-time delta (scaling contract —
-          // see TaskTimeTally)
+          // see `obs`)
           try org.apache.spark.sql.GraftSqlBridge.drainListenerBus(spark)
           catch { case scala.util.control.NonFatal(_) => () }
-          val taskS = (taskTally.ms.get() - task0) / 1e3
+          val taskS = (obs.totals.runTimeMs - task0) / 1e3
           if ((p > 0 || !ok) && ok)
             taskSecs(named(i)._1) =
               taskSecs.getOrElse(named(i)._1, Vector.empty) :+ taskS
@@ -267,7 +232,7 @@ object Bench {
               s"heap=${(Runtime.getRuntime.totalMemory -
                 Runtime.getRuntime.freeMemory) / (1024 * 1024)}m " +
               s"load=$load1 steal=$stealJiffies")
-          sweepBlocks(spark, before)
+          Dev.sweepBlocks(spark, before)
           if (p > 0 || !ok)
             runs(i) :+= (if (ok) dt else -1.0)
         }
@@ -282,7 +247,7 @@ object Bench {
         health += s"""{"pass":$p,"wall_s":${fmt((System.nanoTime() - t0) / 1e9)},""" +
           s""""gc_ms":${totalGcMs - gc0},""" +
           s""""heap_used_mb":${(rt.totalMemory - rt.freeMemory) / (1024 * 1024)},""" +
-          s""""persisted_rdds":${persistedIds(spark).map(_.size).getOrElse(-1)},""" +
+          s""""persisted_rdds":${Dev.persistedIds(spark).map(_.size).getOrElse(-1)},""" +
           s""""blockdir_mb":${blockDirBytes / (1024 * 1024)},""" +
           s""""codecache_mb":$codeCacheUsedMb,""" +
           s""""load1":"$load1","steal_j":$stealJiffies}"""
@@ -304,108 +269,7 @@ object Bench {
         fmt(pct(runs(i), 0.75)) + "]"
     }.mkString("{", ",", "}")
 
-  /** The heaviest queries by sf0.1 median (r5 bench) — the set the
-    * synthetic scale tier re-times, where data-dependent regressions
-    * show above the ~0.5 s plan+codegen fixed cost that dominates at
-    * sf0.1. q01 (r5's #9) is deliberately NOT here: its fixed shipdate
-    * predicate prunes the tier's era-shifted copies at the scan, so it
-    * measures pushdown, not data scaling — q62 (r5's #11) takes the
-    * slot. */
-  private val scaleTierQueries = Seq(
-    "q106_pq_ann", "q110_dup_spans", "q109_pq_ivf", "q112_pq_residual_ivf",
-    "q114_range_join", "q107_semantic_dedup", "q81_contamination",
-    "q47_minhash_lsh", "q62_dedup_clusters", "q84_regrid_coarsen",
-    // r6 verdict: the int8-IVF trade (codes-only reads) and the recall
-    // audit must show their scaling, not just their sf0.1 medians
-    "q104_quantized_ivf", "q121_ann_recall",
-    // r7: the LM filter is the newest >2s query — its token-window
-    // shuffle and bigram-model join are the data-dependent parts
-    "q127_lm_perplexity",
-    // r7: incremental dedup is the daily-ingest shape — its minhash +
-    // band-join cost must track the batch split, not the corpus size
-    "q139_incremental_dedup",
-    // r8 (r7 verdict #7): the three heaviest new queries — filter
-    // stack, RRF fusion, hard-negative mining — get scaling evidence,
-    // not just audited shapes
-    "q131_filter_stack", "q138_hybrid_rrf", "q141_hard_negatives",
-    // r8 additions with non-obvious scale shapes: the containment
-    // token self-join, the hot-span frequency join, and the two-round
-    // Lloyd trainer (measured 1.15x/1.8x/1.6x at the 3x tier)
-    "q143_containment_dedup", "q144_hot_spans", "q146_kmeans_ivf",
-    // r9: the two corpus-pass-dominated newcomers — novelty's span join
-    // against the reference store and PCA's d2-explode covariance
-    // accumulation — are the data-dependent halves of their families
-    "q152_novelty_vs_reference", "q155_pca_component",
-    // r8 late additions: the iterative min-label components (rounds ×
-    // per-round joins — does the ROUND COUNT grow with data?), and the
-    // prefix-filter exact join (candidate volume is the clique mass —
-    // the quadratic-output risk the per-source work unit bounds)
-    "q174_global_components", "q182_prefix_filter_join",
-    // r9 (r8 verdict #4): round 8's heaviest otherwise-unscaled
-    // queries — Lloyd training (rounds × corpus pass), the PCA-reduced
-    // ANN audit (d²-frame iterations + full-space exact rider), the
-    // sketch-overlap matrix (sketch×sketch joins + exact rider), and
-    // DoReMi (domain-sized loop frames over a corpus-sized base)
-    "q147_trained_ivf_search", "q160_pca_reduced_ann",
-    "q189_hll_overlap", "q167_doremi_reweight",
-    // r9 second half: the iterative graph family (does per-ROUND cost
-    // track the edge count — ranks/deg are node-sized, edges
-    // data-sized?) and facility location (corpus × pool sims + per-pick
-    // coverage updates — the corpus-pass-per-pick shape)
-    "q210_pagerank", "q215_personalized_pagerank", "q216_kcore_peel",
-    "q217_facility_location",
-    // r10 (r9 verdict #5): the SNM rank-block join, the self-BLEU
-    // bigram join, the JL pair audit, and the capped pair generation —
-    // the shapes whose constants matter at 3× — plus the round's two
-    // new iterative operators: directed PageRank (dangling aggregate
-    // per round) and the incremental-CC merge (delivery-sized
-    // contract). q221's tier evidence is the composed_v4 section,
-    // which times a superset DAG — a tier row would re-run the whole
-    // pipeline again for no new information.
-    "q211_sorted_neighborhood", "q212_selfbleu_redundancy",
-    "q218_jl_projection", "q220_bipartite_projection",
-    "q222_pagerank_directed", "q223_incremental_components",
-    // r10 second half: the two newest iterative operators — HITS
-    // (2 rank-vector joins per round) and label propagation (1 join +
-    // a pushed-down top-1 per round) — complete the graph family's
-    // scaling evidence
-    "q224_hits", "q226_label_propagation",
-    // r11 (r10 verdict #6): the second-half graph family's
-    // scale-relevant shapes — Adamic–Adar's C(cap,2) pair fan-out,
-    // SSSP's growing dist frame, the random walk's row_number-indexed
-    // adjacency, and the conflict-free Louvain sweep (proposal +
-    // two community-window top-1s per sweep)
-    "q228_adamic_adar", "q229_sssp_trust", "q232_random_walk",
-    "q235_louvain_sweep",
-    // r11 second half: the full Louvain level loop — does the
-    // level-1 proposal volume and the contracted level-2 sweep track
-    // the edge count? — plus the three genuinely new per-round
-    // shapes: the truss peel's triangle enumeration, weighted
-    // diffusion's weight-sum masses, and the onion peel's
-    // data-derived min-degree threshold. (q237/q238/q241 reuse
-    // already-tiered shapes: q210's rank join, q234's pair windows,
-    // q233's label-attach aggregate.)
-    "q242_louvain_levels", "q236_ktruss_peel",
-    "q240_weighted_label_propagation", "q243_onion_layers",
-    // r12: q237/q238/q241 get measured tier rows (the r11 exclusion
-    // argued by shape-analogy; the r11 verdict asked for data) — they
-    // run in BOTH tiers. q244 (Louvain to convergence, r13) is
-    // full-tier only: a 20–30-round loop of the batch sweep + the
-    // q242 contract shape (measured 247 s median at 3× —
-    // BENCH_FULL_TIER_r13.json), per-round shapes the slim tier
-    // already times every round via q235/q242.
-    "q237_pagerank_weighted", "q238_walk_ppmi", "q241_conductance",
-    "q244_louvain_converge",
-    // r15: the stability audit's tier row — its 2×4 static sweeps are
-    // the q235/q246 shapes, but the contingency reduction's cell-frame
-    // size (|A|×|B| label pairs) is the one genuinely new scale axis
-    "q247_community_stability",
-    // r14: the γ = 3/2 resolution sweep — same per-sweep shape as
-    // q235/q244 but a 4-sweep static chain; its tier row shows whether
-    // the γ-scaled prefix bound changes the acceptance volume's growth
-    "q246_louvain_resolution")
-
-  /** The DEFAULT tier (r11 verdict #1): the driver's unattended run
+  /** The scale tier's rows (r11 verdict #1): the driver's unattended run
     * must fit its 1-hour wall budget — the r11 suite structurally
     * outgrew it (≈4,300 s: 48 tier rows × 6 passes + 4 composed
     * sections) and round 11 shipped with NO bench line (rc 124). The
@@ -413,9 +277,7 @@ object Bench {
     * last two rounds (the graph family — where a regression could
     * actually originate) plus q210 as the cross-round anchor, at the
     * base pass count, with composed_v4 (the newest pipeline, whose DAG
-    * subsumes v2/v3's stages) as the single composed section. The full
-    * 48-row / 5-pass adjudication tier stays available
-    * under SPARK_GRAFT_TIER=full for the builder's own runs. */
+    * subsumes v2/v3's stages) as the single composed section. */
   private val slimTierQueries = Seq(
     "q210_pagerank", "q222_pagerank_directed", "q224_hits",
     "q226_label_propagation", "q228_adamic_adar", "q229_sssp_trust",
@@ -488,51 +350,18 @@ object Bench {
       .foreach(t => write(Tables(spark, src, t), t))
   }
 
-  /** Tallies shuffle/spill bytes across completed stages — the scale
-    * signal of the composed-pipeline rehearsal (wall time alone hides a
-    * stage that quietly doubled its shuffle). Listener delivery is
-    * async; [[drain]] blocks until the bus has delivered every queued
-    * event before reading. */
-  private class ShuffleTally(spark: SparkSession)
-      extends org.apache.spark.scheduler.SparkListener {
-    @volatile var write = 0L
-    @volatile var read = 0L
-    @volatile var peakStageWrite = 0L
-    @volatile var spill = 0L
-    override def onStageCompleted(
-        sc: org.apache.spark.scheduler.SparkListenerStageCompleted): Unit = {
-      val tm = sc.stageInfo.taskMetrics
-      if (tm != null) {
-        write += tm.shuffleWriteMetrics.bytesWritten
-        read += tm.shuffleReadMetrics.totalBytesRead
-        peakStageWrite =
-          math.max(peakStageWrite, tm.shuffleWriteMetrics.bytesWritten)
-        spill += tm.diskBytesSpilled
-      }
-    }
-    def drain(): Unit = org.apache.spark.sql.GraftSqlBridge.drainListenerBus(spark)
-  }
-
-  /** Cumulative executor task time (ms) across all completed tasks —
-    * the scaling-contract signal (r17 verdict #2/#4): the driver's
-    * low-core probe cannot distinguish "bench ignores
-    * $SPARK_GRAFT_CPUS" from "honors it but the queries are
-    * checkpoint-latency-bound at sf0.1" from wall time alone, because
-    * a latency-bound query barely moves 8→32 cores. task_time/wall
-    * says it directly: a query with task_time ≈ wall is serial/latency
-    * -bound (flat core scaling is EXPECTED); task_time ≫ wall is
-    * parallel compute that must scale with cores. Deltas are read
-    * after a listener-bus drain so a query's tail tasks land on it,
-    * not its neighbor. */
-  private class TaskTimeTally extends org.apache.spark.scheduler.SparkListener {
-    val ms = new java.util.concurrent.atomic.AtomicLong(0L)
-    override def onTaskEnd(
-        te: org.apache.spark.scheduler.SparkListenerTaskEnd): Unit = {
-      val tm = te.taskMetrics
-      if (tm != null) ms.addAndGet(tm.executorRunTime)
-    }
-  }
-  private val taskTally = new TaskTimeTally
+  /** The run's one metrics listener, registered in main for the whole
+    * run. Executor task time is the scaling-contract signal (r17
+    * verdict #2/#4): the driver's low-core probe cannot distinguish
+    * "bench ignores $SPARK_GRAFT_CPUS" from "honors it but the queries
+    * are checkpoint-latency-bound at sf0.1" from wall time alone,
+    * because a latency-bound query barely moves 8→32 cores.
+    * task_time/wall says it directly: a query with task_time ≈ wall is
+    * serial/latency-bound (flat core scaling is EXPECTED); task_time ≫
+    * wall is parallel compute that must scale with cores. Deltas are
+    * read after a listener-bus drain so a query's tail tasks land on
+    * it, not its neighbor. */
+  private val obs = new graft.obs.Collector
   /** name -> executor task seconds per kept pass (parallel to the
     * wall-time `runs` vectors; merged across base/stabilize/widen). */
   private val taskSecs =
@@ -548,59 +377,56 @@ object Bench {
     * representative. */
   private def scaleShuffleJson(spark: SparkSession, scaleDir: String,
       named: Seq[(String, (SparkSession, String) => DataFrame)]): String = {
-    val tally = new ShuffleTally(spark)
-    spark.sparkContext.addSparkListener(tally)
     val mb = 1024.0 * 1024.0
-    try {
-      named.map { case (name, fn) =>
-        tally.drain()
-        val w0 = tally.write; val r0 = tally.read; val s0 = tally.spill
-        val before = persistedIds(spark)
-        try fn(spark, scaleDir).write.format("noop").mode("overwrite").save()
-        catch { case scala.util.control.NonFatal(_) => () }
-        sweepBlocks(spark, before)
-        tally.drain()
-        s""""$name":{"write_mb":${fmt((tally.write - w0) / mb)},""" +
-          s""""read_mb":${fmt((tally.read - r0) / mb)},""" +
-          s""""spill_mb":${fmt((tally.spill - s0) / mb)}}"""
-      }.mkString("{", ",", "}")
-    } finally spark.sparkContext.removeSparkListener(tally)
+    named.map { case (name, fn) =>
+      org.apache.spark.sql.GraftSqlBridge.drainListenerBus(spark)
+      val m0 = obs.totals
+      val before = Dev.persistedIds(spark)
+      try fn(spark, scaleDir).write.format("noop").mode("overwrite").save()
+      catch { case scala.util.control.NonFatal(_) => () }
+      Dev.sweepBlocks(spark, before)
+      org.apache.spark.sql.GraftSqlBridge.drainListenerBus(spark)
+      val m = obs.totals - m0
+      s""""$name":{"write_mb":${fmt(m.shuffleWrite / mb)},""" +
+        s""""read_mb":${fmt(m.shuffleRead / mb)},""" +
+        s""""spill_mb":${fmt(m.spill / mb)}}"""
+    }.mkString("{", ",", "}")
   }
 
   /** Rehearsal of the v4 (rank + tier gated) pipeline: ONE source
     * affinity graph feeds PageRank authority AND seed-clamped label
     * propagation; both host-sized verdict frames gate docs in one
     * pass before the nine v2 stages; build + the four-gate audit
-    * frame (leakage, PSI, rank_gate, tier_gate) time as one pass. */
-  private def composedV4Section(spark: SparkSession, scaleDir: String,
-      passes: Int): String = {
-    val tally = new ShuffleTally(spark)
-    spark.sparkContext.addSparkListener(tally)
+    * frame (leakage, PSI, rank_gate, tier_gate) time as one pass.
+    * ONE timed pass (r17 verdict #10: the driver's run tripped its
+    * 2700 s budget AT phase_composed_v4 two rounds running — one
+    * measured pass inside the budget beats two that never happen). */
+  private def composedV4Section(spark: SparkSession, scaleDir: String): String =
     try {
-      val runs = (1 to passes).map { _ =>
-        val before = persistedIds(spark)
-        val t0 = System.nanoTime()
-        val docs = Tables(spark, scaleDir, "documents")
-        val (chunks, audit) =
-          graft.ops.CorpusPipelineV2.buildAndAuditTierGated(docs)
-        chunks.write.format("noop").mode("overwrite").save()
-        audit.write.format("noop").mode("overwrite").save()
-        val dt = (System.nanoTime() - t0) / 1e9
-        sweepBlocks(spark, before)
-        dt
-      }
-      tally.drain()
+      org.apache.spark.sql.GraftSqlBridge.drainListenerBus(spark)
+      val m0 = obs.totals
+      obs.markPeak()
+      val before = Dev.persistedIds(spark)
+      val t0 = System.nanoTime()
+      val docs = Tables(spark, scaleDir, "documents")
+      val (chunks, audit) =
+        graft.ops.CorpusPipelineV2.buildAndAuditTierGated(docs)
+      chunks.write.format("noop").mode("overwrite").save()
+      audit.write.format("noop").mode("overwrite").save()
+      val dt = (System.nanoTime() - t0) / 1e9
+      Dev.sweepBlocks(spark, before)
+      org.apache.spark.sql.GraftSqlBridge.drainListenerBus(spark)
+      val m = obs.totals - m0
       val mb = 1024.0 * 1024.0
       s""","composed_v4":{"stages":"affinity_graph>(rank_gate|tier_gate)>q149>q76>q143>q99>q62>q126>q150>q88>q132+audits(q151,q159,rank_gate,tier_gate)",""" +
-        s""""runs":[${runs.map(fmt).mkString(",")}],""" +
-        s""""shuffle_write_mb":${fmt(tally.write / mb / passes)},""" +
-        s""""shuffle_read_mb":${fmt(tally.read / mb / passes)},""" +
-        s""""peak_stage_shuffle_write_mb":${fmt(tally.peakStageWrite / mb)},""" +
-        s""""disk_spill_mb":${fmt(tally.spill / mb / passes)}}"""
+        s""""runs":[${fmt(dt)}],""" +
+        s""""shuffle_write_mb":${fmt(m.shuffleWrite / mb)},""" +
+        s""""shuffle_read_mb":${fmt(m.shuffleRead / mb)},""" +
+        s""""peak_stage_shuffle_write_mb":${fmt(obs.peakStageShuffleWrite / mb)},""" +
+        s""""disk_spill_mb":${fmt(m.spill / mb)}}"""
     } catch { case scala.util.control.NonFatal(e) =>
       s""","composed_v4":{"error":"${e.getClass.getSimpleName}"}"""
-    } finally spark.sparkContext.removeSparkListener(tally)
-  }
+    }
 
   def main(args: Array[String]): Unit = {
     val mainT0 = System.nanoTime()
@@ -613,7 +439,6 @@ object Bench {
     // >1.3× get a third stabilizing pass, and rows over the 2× health
     // bar still get the full widen adjudication below.
     val passes = sys.env.getOrElse("SPARK_GRAFT_BENCH_RUNS", "2").toInt
-    val scaleCopies = sys.env.getOrElse("SPARK_GRAFT_SCALE_COPIES", "3").toInt
     val scaleDir = sys.env.getOrElse("SPARK_GRAFT_SCALE_DIR", "/tmp/graft_scale_tier")
     // Wall-clock budget (r14 verdict #1 — the driver kills the bench
     // at ~60 min and r14 died rc=124 with every measured number lost).
@@ -622,33 +447,21 @@ object Bench {
     // between-queries check can't preempt. Checked between passes'
     // queries, between widen candidates, and between tier phases; when
     // exceeded the run SKIPS remaining phases and ships what it has
-    // with a "budget_exceeded" marker. 0 disables (builder full-tier
-    // runs).
+    // with a "budget_exceeded" marker. 0 disables.
     val budgetS = sys.env.getOrElse("SPARK_GRAFT_BENCH_BUDGET_S", "2700").toInt
     val deadlineNs = if (budgetS <= 0) 0L else mainT0 + budgetS * 1000000000L
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      // UTC makes TimeEnc's NTZ→TZ cast value-identity regardless of the
-      // host JVM's zone (r7 advice: never rely on the host being UTC)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-    graft.ops.Iterate.quietReleaseWarnings()
-    // scaling-contract telemetry (r17 verdict #2): registered for the
-    // whole run; timePasses reads per-query deltas
-    spark.sparkContext.addSparkListener(taskTally)
-    // Warmup outside the timed region: materialize every table through
-    // the noop sink — a count() is answered from parquet footers and
-    // never touches the row data, so the first heavy query would still
-    // pay the cold columnar read + decode (~1 s on lineitem at sf0.1).
-    Tables.all.foreach(t =>
-      Tables(spark, sfDir, t).write.format("noop").mode("overwrite").save())
+    val spark = Dev.session()
+    // registered for the whole run; timePasses, the shuffle phase and
+    // composed_v4 read per-query deltas
+    spark.sparkContext.addSparkListener(obs)
+    // warmup outside the timed region
+    Dev.warmTables(spark, sfDir)
     warmupShufflePath(spark, sfDir)
     // SPARK_GRAFT_ONLY=q121,q114 times just those queries (prefix
     // match) — the dev loop for one perf experiment; the full-suite
-    // contract (driver runs with the var unset) is unchanged
+    // contract (driver runs with the var unset) is unchanged. A
+    // filtered run writes no BENCH_DETAIL.json, so it also skips the
+    // scale tier and composed_v4.
     val only = sys.env.get("SPARK_GRAFT_ONLY")
       .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSet)
     // q244 runs Louvain TO CONVERGENCE (20–28 batch sweeps per level,
@@ -659,12 +472,10 @@ object Bench {
     // signal (r14 verdict #5). q247 (two 4-sweep chains, ~46 s quiet)
     // and its ARI sibling q248 (the same two chains plus one scalar
     // row) moved out with them in r16 (r15 verdict #2 — q247 alone was
-    // ~10% of every base pass and its scaling story already lives in
-    // its full-tier row); together these skips put the base section
-    // under the 20-minute driver target. The FULL tier
-    // (SPARK_GRAFT_TIER=full) still times q244/q246/q247 as their own
-    // rows, and Verify/CORRECTNESS check all four at sf0.01 like every
-    // query.
+    // ~10% of every base pass); together these skips put the base
+    // section under the 20-minute driver target. graft.Profile times
+    // them ad hoc, and Verify/CORRECTNESS check them at sf0.01 like
+    // every query.
     // q252 (NMI) joins them in r17: the identical two sweep chains
     // plus community-count-sized entropy aggregates
     val baseSkip = Set("q244_louvain_converge", "q246_louvain_resolution",
@@ -819,7 +630,7 @@ object Bench {
     // — the r17 verdict #2 scaling-contract addition: task_time/wall ≈ 1
     // reads "latency-bound, flat core scaling expected"; ≫ 1 reads
     // "parallel compute, must scale with $SPARK_GRAFT_CPUS". The bench
-    // honors the env var (master local[$cpus], Bench.scala:~700); this
+    // honors the env var (Dev.session: master local[$cpus]); this
     // makes that distinguishable from the outside.
     val taskLine = results.filter(r => slimTierQueries.contains(r._1))
       .map { case (k, _) =>
@@ -838,19 +649,16 @@ object Bench {
     // a complete summary NOW — if the driver kills the tier below,
     // this line is the last complete JSON on stdout and parses
     println(summaryLine("base"))
-    // scale tier: replicate sf0.1 `scaleCopies`× into /tmp and re-time
-    // the heavy set there — sf0.1 medians sit at the plan+codegen fixed
-    // cost, so only the tier shows data-dependent regressions (and
-    // q106's memory-pressure envelope). SPARK_GRAFT_TIER selects the
-    // row set: "slim" (default — fits the driver's budget),
-    // "full" (the 48-row / 5-pass adjudication
-    // run), "off". Every PHASE is guarded independently (r11 verdict
-    // #2): one fatal error late in the tier must discard only its own
-    // phase, never the already-measured rows — partial results ship
-    // with the error attached under "errors".
-    val tierMode = sys.env.getOrElse("SPARK_GRAFT_TIER", "slim")
+    // scale tier: replicate sf0.1 three times into /tmp and re-time
+    // the slim rows there — sf0.1 medians sit at the plan+codegen fixed
+    // cost, so only the tier shows data-dependent regressions. Every
+    // PHASE is guarded independently (r11 verdict #2): one fatal error
+    // late in the tier must discard only its own phase, never the
+    // already-measured rows — partial results ship with the error
+    // attached under "errors".
+    val scaleCopies = 3
     val scaleSection =
-      if (scaleCopies <= 1 || tierMode == "off") ""
+      if (only.isDefined) ""
       else {
         val parts = scala.collection.mutable.ArrayBuffer.empty[String]
         val errs = scala.collection.mutable.ArrayBuffer.empty[String]
@@ -879,15 +687,8 @@ object Bench {
               false
           }
         }
-        val tierRows =
-          if (tierMode == "full") scaleTierQueries else slimTierQueries
-        // r10 verdict #4: the FULL tier runs five kept passes per row
-        // (3-pass medians let one slow final pass be the p50 neighbor);
-        // the slim tier keeps the base pass count to fit the budget.
-        val tierPasses = if (tierMode == "full") passes + 2 else passes
-        // from the UNFILTERED registry: the full tier times q244 even
-        // though the base section skips it
-        val heavy = allNamed.filter(q => tierRows.contains(q._1))
+        val heavy = named.filter(q => slimTierQueries.contains(q._1))
+        val composed = new StringBuilder
         val built = phase("tier_build") {
           buildScaleTier(spark, sfDir, scaleDir, scaleCopies)
         }
@@ -895,10 +696,7 @@ object Bench {
           // same warmup contract as the primary tier: cold columnar
           // reads of the freshly-written tier files must not land on
           // whichever heavy query happens to touch a table first
-          phase("tier_warmup") {
-            Tables.all.foreach(t => Tables(spark, scaleDir, t)
-              .write.format("noop").mode("overwrite").save())
-          }
+          phase("tier_warmup") { Dev.warmTables(spark, scaleDir) }
           phase("tier_runs") {
             val tierHealth =
               scala.collection.mutable.ArrayBuffer.empty[String]
@@ -910,7 +708,7 @@ object Bench {
             // cannot out-vote one disturbed pass. Noisy rows get two
             // extra passes and report the median-of-5, so one
             // disturbed pass can never sit next to the median.
-            val traw = timePasses(spark, scaleDir, heavy, tierPasses,
+            val traw = timePasses(spark, scaleDir, heavy, passes,
               tierHealth, deadlineNs = deadlineNs)
             stabilize(traw, heavy, scaleDir)
             val sruns = widen(traw, heavy, scaleDir, tierWidenSkipped)
@@ -923,75 +721,15 @@ object Bench {
           phase("shuffle") {
             parts += s""""shuffle":${scaleShuffleJson(spark, scaleDir, heavy)}"""
           }
-          // q244 sweep-count telemetry (r13 verdict #4): the quantity
-          // that decides 100 TB feasibility for a convergence loop is
-          // how the SWEEP HORIZON grows with graph size, not the wall
-          // time — emit per-level sweep counts at both scales the full
-          // tier touches (1× = sfDir, copies× = scaleDir). Since r16
-          // (ADVICE r15) the copies× counts come from the convergence
-          // loop the tier ALREADY TIMED — louvainConverge records its
-          // per-level sweep counts driver-side as it runs
-          // (Graph.lastConvergeSweeps), and the most recent q244
-          // execution at this point is the tier/shuffle pass over
-          // scaleDir — so only the 1× side pays a materialization
-          // (q244 is base-skipped; no 1× pass exists to reuse). If the
-          // tier never reached q244 (earlier phase died), the
-          // telemetry is empty and the copies× side falls back to the
-          // old explicit materialization.
-          if (tierMode == "full") phase("louvain_sweeps") {
-            val q244 = SparkEntry.queries("q244_louvain_converge")
-            def sweepsJson(sw: Seq[(Long, Long)]): String =
-              sw.sortBy(_._1).map { case (l, s) => s""""$l":$s""" }
-                .mkString("{", ",", "}")
-            // CONSTRUCTING the q244 frame runs the convergence loop
-            // (driver-eager: each sweep's move count is an action) and
-            // fills the telemetry; the returned output frame — whose
-            // tagged-modularity scoring is the expensive half — is
-            // never materialized here. Its lineage-cut checkpoints are
-            // swept like any query's.
-            def runForSweeps(dir: String): Seq[(Long, Long)] = {
-              val before = persistedIds(spark)
-              graft.ops.Graph.convergeDataTag = dir
-              q244(spark, dir)
-              val sw = graft.ops.Graph.lastConvergeSweeps
-              sweepBlocks(spark, before)
-              sw
-            }
-            // reuse only counts STAMPED with scaleDir (ADVICE r16): an
-            // `only`-filtered base pass can populate the telemetry
-            // from sfDir, and a tier that then failed or budget-
-            // skipped before re-running q244 would otherwise emit 1×
-            // counts labeled as the copies× side
-            val xN =
-              if (graft.ops.Graph.lastConvergeSweeps.nonEmpty &&
-                  graft.ops.Graph.lastConvergeTag == scaleDir)
-                graft.ops.Graph.lastConvergeSweeps
-              else runForSweeps(scaleDir)
-            val x1 = runForSweeps(sfDir)
-            parts += s""""louvain_sweeps":{"x1":${sweepsJson(x1)},""" +
-              s""""x$scaleCopies":${sweepsJson(xN)}}"""
-          }
-        }
-        val composed = new StringBuilder
-        // composed sections are gated on the SAME built flag as the
-        // tier phases (r12 advice): timing pipelines against a missing
-        // or half-written scaleDir wastes wall and mints misleading
-        // error entries
-        if (built) {
           // v4's DAG subsumes the v2 stages and the v3 rank gate, so
-          // it is the only composed section.
-          // SLIM runs time ONE v4 pass (r17 verdict #10: the driver's
-          // slim run tripped its 2700 s budget AT phase_composed_v4
-          // two rounds running, so the section kept getting skipped —
-          // one measured pass inside the budget beats two passes that
-          // never happen; the full tier keeps the multi-pass medians)
+          // it is the only composed section; like the tier phases it
+          // runs only over a built scaleDir (r12 advice)
           phase("composed_v4") {
-            composed ++= composedV4Section(spark, scaleDir,
-              if (tierMode == "full") passes else 1) }
+            composed ++= composedV4Section(spark, scaleDir) }
         }
         val head = Seq(
           s""""dir":"${graft.io.Sink.jsonEscape(scaleDir)}"""",
-          s""""mode":"${graft.io.Sink.jsonEscape(tierMode)}"""",
+          s""""mode":"slim"""",
           s""""copies":$scaleCopies""") ++ parts ++
           (if (errs.isEmpty) Nil
            else Seq(s""""errors":{${errs.mkString(",")}}"""))

@@ -1,15 +1,11 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.execution.QueryExecution
-import org.apache.spark.sql.util.QueryExecutionListener
-
 /** Dev tool (optimization rounds): run selected queries through the
-  * noop sink with a QueryExecutionListener that captures EVERY
-  * action's executed plan — including the eager per-round checkpoint
-  * and count actions inside iterative operators, which are invisible
-  * to `explain` on the returned frame (it only shows the final
-  * checkpoint scan + orderBy). Plans are deduplicated by their
+  * noop sink and capture EVERY action's executed plan
+  * ([[graft.obs.Plans.capture]]) — including the eager per-round
+  * checkpoint and count actions inside iterative operators, which are
+  * invisible to `explain` on the returned frame (it only shows the
+  * final checkpoint scan + orderBy). Plans are deduplicated by their
   * formatted text with RDD/plan ids normalized out, so a 40-round loop
   * prints each distinct per-round shape once with a repeat count —
   * exactly the evidence `plans/rNN/` needs for join-strategy and
@@ -21,15 +17,7 @@ object PlanTrace {
     val sfDir = args(0)
     val names = SparkEntry.queries.keys.toSeq.sorted
       .filter(n => args.drop(1).exists(n.startsWith))
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-    graft.ops.Iterate.quietReleaseWarnings()
+    val spark = Dev.session()
     // ids differ per run/round but the SHAPE is what the evidence
     // pins: normalize expression ids (#123), plan ids, rdd ids and
     // statistics digits so identical round plans dedupe
@@ -40,34 +28,21 @@ object PlanTrace {
         .replaceAll("ExistingRDD\\[\\d+\\]", "ExistingRDD[_]")
         .replaceAll("Scan ExistingRDD rdd_\\d+", "Scan ExistingRDD rdd__")
         .replaceAll("\\(\\d+\\)", "(_)")
-    val seen = scala.collection.mutable.LinkedHashMap
-      .empty[String, (String, String, Int)] // norm -> (name, text, count)
-    val listener = new QueryExecutionListener {
-      override def onSuccess(funcName: String, qe: QueryExecution,
-          durationNs: Long): Unit = {
-        val txt = try qe.explainString(
-            org.apache.spark.sql.execution.ExplainMode.fromString("formatted"))
-          catch { case scala.util.control.NonFatal(e) => s"<explain failed: $e>" }
-        val key = normalize(txt)
-        seen.get(key) match {
-          case Some((n, t, c)) => seen(key) = (n, t, c + 1)
-          case None            => seen(key) = (funcName, txt, 1)
-        }
-      }
-      override def onFailure(funcName: String, qe: QueryExecution,
-          exception: Exception): Unit = ()
-    }
-    Tables.all.foreach(t =>
-      Tables(spark, sfDir, t).write.format("noop").mode("overwrite").save())
+    Dev.warmTables(spark, sfDir)
     names.foreach { n =>
       println(s"\n######## $n ########")
-      seen.clear()
-      spark.listenerManager.register(listener)
-      SparkEntry.queries(n)(spark, sfDir)
-        .write.format("noop").mode("overwrite").save()
-      // listener bus is async — drain before reading the capture
-      org.apache.spark.sql.GraftSqlBridge.drainListenerBus(spark)
-      spark.listenerManager.unregister(listener)
+      val plans = graft.obs.Plans.capture(spark) {
+        SparkEntry.queries(n)(spark, sfDir)
+          .write.format("noop").mode("overwrite").save()
+      }
+      // (first action name, first text, count) per normalized shape
+      val seen = scala.collection.mutable.LinkedHashMap
+        .empty[String, (String, String, Int)]
+      plans.foreach { case (fn, txt) =>
+        val key = normalize(txt)
+        val (f, t, c) = seen.getOrElse(key, (fn, txt, 0))
+        seen(key) = (f, t, c + 1)
+      }
       seen.values.zipWithIndex.foreach { case ((fn, txt, c), i) =>
         println(s"\n===== $n action ${i + 1} ($fn, x$c) =====")
         println(txt)

@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
@@ -14,15 +13,7 @@ object Verify {
         System.err.println("usage: Verify <sfDir> <outDir> [nameFilter]")
         sys.exit(2)
     }
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    graft.ops.Iterate.quietReleaseWarnings()
+    val spark = Dev.session(logLevel = "WARN")
     new java.io.File(outDir).mkdirs()
     // filter = comma-separated substrings, any-match
     val fParts = nameFilter.map(_.split(',').toSeq.filter(_.nonEmpty))
@@ -35,16 +26,14 @@ object Verify {
       // queries are self-contained: release the checkpoint blocks each
       // one created, so a 220-query dump doesn't accumulate
       // executor-storage pressure (same sweep as Bench)
-      val before = spark.sparkContext.getPersistentRDDs.keySet.toSet
+      val before = Dev.persistedIds(spark)
       try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
         .parquet(s"$outDir/$name")
       catch { case e: Throwable =>
         System.err.println(s"[verify] $name failed: ${e.getMessage}")
         failures(name) = (e.getClass.getName, String.valueOf(e.getMessage))
       }
-      spark.sparkContext.getPersistentRDDs.foreach { case (id, rdd) =>
-        if (!before.contains(id)) rdd.unpersist(blocking = false)
-      }
+      Dev.sweepBlocks(spark, before)
     }
     // every JSON string goes through Sink.jsonEscape — a tab or CR in
     // an oracle's SQL would otherwise make a reader's json.load fail

@@ -482,22 +482,6 @@ object CorpusPipelineV2 {
         .unionByName(tierAudit).unionByName(phiAudit))
   }
 
-  /** v3 composition: the rank gate ([[rankGate]]) feeds the full v2
-    * pipeline, with ONE gate evaluation and ONE document-level DAG
-    * shared by build and audits. The audit frame carries the gate's
-    * per-source verdicts (check = 'rank_gate') beside the leakage and
-    * PSI gates — stage attribution for the promotion record. The PSI
-    * reference side stays the RAW corpus deliberately: the drift gate
-    * must see what the authority gate itself did to the tail sources'
-    * length distributions, not blame it on the cleaning stages.
-    * Returns (chunk frame, audit frame). */
-  def buildAndAuditRankGated(docs: DataFrame): (DataFrame, DataFrame) = {
-    val (gated, gateAudit) = rankGate(docs)
-    val st = stages(gated, checkpoint = true)
-    val kept = st.kept.transform(Iterate.cut)
-    (buildFromKept(kept), auditsFromKept(docs, kept).unionByName(gateAudit))
-  }
-
   /** The pipeline's END-STATE as one deterministic, oracle-checkable
     * frame (q221): per-stage survivor counts, the final per-split and
     * per-(split, shard) chunk totals, and the two audit gates — the

@@ -1842,14 +1842,8 @@ object Graph {
       minGainDen: Long = 0L): DataFrame = {
     val spark = edgesW.sparkSession
     import spark.implicits._
-    // clear UP FRONT (ADVICE r16): a cap-raise abort below must not
-    // leave a PREVIOUS call's sweep counts on the JVM for a later
-    // telemetry reader to attribute to the failed run
-    lastConvergeSweeps = Nil
-    lastConvergeTag = convergeDataTag
     var ew = edgesW
     val out = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
-    val sweepLog = scala.collection.mutable.ArrayBuffer.empty[(Long, Long)]
     var level = 1
     var levelMoved = -1L
     while (level <= maxLevels && levelMoved != 0L) {
@@ -1914,7 +1908,6 @@ object Graph {
         .join(qs.select($"tag".as("sweep"), $"q"), Seq("sweep"))
         .select(lit(level.toLong).as("level"), $"sweep", $"n_comms",
           coalesce($"n_moved", lit(0L)).as("n_moved"), $"q")
-      sweepLog += ((level.toLong, sweep.toLong))
       level += 1
     }
     if (levelMoved != 0L)
@@ -1922,37 +1915,8 @@ object Graph {
         s"louvainConverge: level cap $maxLevels hit with the last " +
           s"level still accepting $levelMoved moves — the hierarchy " +
           "lacks its all-quiet witness; raise maxLevels")
-    lastConvergeSweeps = sweepLog.toList
     out.reduce(_ unionByName _).orderBy($"level", $"sweep")
   }
-
-  /** Driver-side telemetry from the most recent [[louvainConverge]]
-    * call on this JVM: (level, executed sweeps) per level, already
-    * known to the driver loop when the call returns — reading it costs
-    * nothing. The bench's `louvain_sweeps` section consumes this from
-    * the pass it already timed instead of re-materializing the whole
-    * convergence loop a second time per scale (ADVICE r15 — that
-    * re-materialization roughly doubled q244's full-tier wall for a
-    * one-line JSON section). Single-writer by construction: only q244
-    * calls louvainConverge, and bench passes run queries sequentially.
-    * Cleared on ENTRY and stamped with [[convergeDataTag]] (ADVICE
-    * r16): an aborted call can no longer expose a previous call's
-    * counts, and a reader can tell which dataset produced them
-    * (the bench reuses the tier's counts only when the stamp equals
-    * the scale directory — otherwise a base-pass run over the 1× dir
-    * would be emitted labeled as the copies× side). */
-  @volatile private[graft] var lastConvergeSweeps: List[(Long, Long)] = Nil
-
-  /** Caller-set provenance for [[lastConvergeSweeps]]: the bench's
-    * pass loops set it to the data directory they are about to run
-    * over; [[louvainConverge]] copies it to [[lastConvergeTag]] at
-    * entry. Empty outside bench runs — consumers treat an empty or
-    * mismatching stamp as "re-measure". */
-  @volatile private[graft] var convergeDataTag: String = ""
-
-  /** The [[convergeDataTag]] current when the most recent
-    * [[louvainConverge]] began. */
-  @volatile private[graft] var lastConvergeTag: String = ""
 
   /** Oracle twin of [[louvainMove]] over caller-defined `ed(src, dst)`
     * and `$comm(node, label)` CTEs; exposes `lvout$sfx(node, label)`.

@@ -1358,9 +1358,9 @@ object GraphQueries extends QueryGroup {
     * Graph.louvainConverge instead of silently emitting a frame
     * without its n_moved = 0 witness (r13 verdict #2).
     *
-    * SIZING THE SWEEP CAP (r14 advice — the bump procedure): the full
-    * tier's `louvain_sweeps` telemetry section measures the level-1
-    * horizon at 1× and copies× every round (28 at both as of r14 —
+    * SIZING THE SWEEP CAP (r14 advice — the bump procedure): q244's
+    * own rows carry the horizon — the largest `sweep` per `level` is
+    * the executed sweep count (level 1: 28 at 1× and 3× as of r16 —
     * scale-invariant). Keep S ≥ ~1.4× the measured horizon; the only
     * cost of a raise is the static DuckDB oracle chain, which is
     * per-sweep-linear (measured 83 s at S=32·L=4 at sf0.01, so ~0.65

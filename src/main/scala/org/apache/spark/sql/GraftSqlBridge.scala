@@ -129,7 +129,7 @@ object GraftSqlBridge {
   }
 
   /** Block until the listener bus has delivered every queued event —
-    * the hook Bench, Profile and PlanTrace read their listeners
+    * the hook `graft.obs` readers (Bench, Profile, PlanTrace) go
     * through: reading a listener's capture right after an action races
     * the async bus, and a fixed sleep only makes the race rarer. */
   def drainListenerBus(spark: SparkSession): Unit =

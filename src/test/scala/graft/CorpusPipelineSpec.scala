@@ -135,24 +135,6 @@ class CorpusPipelineSpec extends SparkSpec {
     assert(again == gatedIds)
   }
 
-  test("v3 composed run: one gate + one DAG, audit carries all three gate families") {
-    val docs = mkDocsV3
-    val (chunks, audit) =
-      graft.ops.CorpusPipelineV2.buildAndAuditRankGated(docs)
-    val chunkDocs = chunks.select($"doc_id").as[Long].collect().toSet
-    val gatedIds = graft.ops.CorpusPipelineV2.rankGate(docs)._1
-      .select($"doc_id").as[Long].collect().toSet
-    // the pipeline only ever sees gated docs
-    assert(chunkDocs.subsetOf(gatedIds))
-    val byCheck = audit.collect().groupBy(_.getString(0))
-    assert(byCheck.contains("rank_gate"))
-    assert(byCheck.contains("psi_drift"))
-    assert(byCheck("rank_gate").length == 4)
-    // PSI rows still reference the RAW corpus on the ref side: every
-    // source that survives to kept gets a row with a finite value
-    assert(byCheck("psi_drift").forall(r => !r.getDouble(2).isNaN))
-  }
-
   // v4 fixture: the same s1—s2—s3—s4 path (aa/bb/cc shared lines),
   // but mean doc length rises monotonically s1 < s2 < s3 < s4, so the
   // deterministic seeding picks s1 as the 'lo' audit and s4 as 'hi';

@@ -1,6 +1,8 @@
 package graft
 
 import graft.ops.{Graph, Iterate, TextOps}
+import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
+import org.apache.spark.sql.execution.{SparkPlan, SparkStrategy}
 import org.apache.spark.sql.functions._
 
 /** Pins the checkpoint-release discipline of [[graft.ops.Iterate]]:
@@ -178,19 +180,34 @@ class IterateSpec extends SparkSpec {
     // assembled trajectory is cut once and the step leaves released:
     // whatever the step count, the walk leaves exactly its 3 static
     // cuts (edges, idxed adjacency, degree) + 1 trajectory leaf.
+    // The count must see only the walk's OWN releases: once the walk
+    // returns, its static cuts are unreachable, and a GC lets Spark's
+    // ContextCleaner unpersist them before the count. A planner
+    // strategy that plans nothing holds every logical plan the walk
+    // plans — and through them every cut — until the count is taken.
     val before = spark.sparkContext.getPersistentRDDs.keySet.toSet
     val fwd = Seq(("a", "b"), ("b", "c"), ("c", "a"), ("a", "c"))
       .toDF("src", "dst")
     val edges = fwd.unionByName(fwd.select($"dst".as("src"), $"src".as("dst")))
+    val held = scala.collection.mutable.ArrayBuffer.empty[LogicalPlan]
+    object Hold extends SparkStrategy {
+      def apply(p: LogicalPlan): Seq[SparkPlan] = {
+        held.synchronized(held += p); Nil
+      }
+    }
     def leftover(steps: Int): Int = {
       val pre = spark.sparkContext.getPersistentRDDs.keySet.toSet
       Graph.randomWalk(edges, Seq("a", "b").toDF("node"), steps).collect()
       spark.sparkContext.getPersistentRDDs.keySet.count(!pre.contains(_))
     }
-    val l3 = leftover(3)
-    val l8 = leftover(8)
+    val prev = spark.experimental.extraStrategies
+    spark.experimental.extraStrategies = prev :+ Hold
+    val (l3, l8) =
+      try (leftover(3), leftover(8))
+      finally spark.experimental.extraStrategies = prev
     assert(l3 == l8, s"step-dependent leak: $l3 vs $l8")
     assert(l3 <= 4, s"expected <= 4 live frames, got $l3")
     sweep(before)
+    held.synchronized(held.clear())
   }
 }

@@ -2,14 +2,13 @@ package graft
 
 import graft.ops.{Graph, Iterate, Relational}
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.execution.{ExplainMode, QueryExecution}
+import org.apache.spark.sql.execution.ExplainMode
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.util.QueryExecutionListener
 
 /** Plan audits for the ITERATIVE loops (r17 verdict #5): the per-round
   * plans live behind eager checkpoints, invisible to `explain` on the
   * returned frame, so these tests capture every executed plan of a
-  * small-N run through a QueryExecutionListener (the PlanTrace
+  * small-N run through `graft.obs.Plans.capture` (the PlanTrace
   * mechanism) and pin the shapes the optimization rounds bought:
   * measured-stats loop broadcasts, the aggregate argmin replacing the
   * window top-1, and randomWalk's single-leaf trajectory. */
@@ -17,22 +16,8 @@ class LoopPlanAuditSpec extends SparkSpec {
   import spark.implicits._
 
   /** All executed plans (formatted) during `body`, bus drained. */
-  private def capture(body: => Unit): Seq[String] = {
-    val plans = scala.collection.mutable.ArrayBuffer.empty[String]
-    val l = new QueryExecutionListener {
-      override def onSuccess(fn: String, qe: QueryExecution,
-          ns: Long): Unit = plans.synchronized {
-        plans += (try qe.explainString(ExplainMode.fromString("formatted"))
-          catch { case scala.util.control.NonFatal(_) => "" })
-      }
-      override def onFailure(fn: String, qe: QueryExecution,
-          e: Exception): Unit = ()
-    }
-    spark.listenerManager.register(l)
-    try { body; org.apache.spark.sql.GraftSqlBridge.drainListenerBus(spark) }
-    finally spark.listenerManager.unregister(l)
-    plans.toSeq
-  }
+  private def capture(body: => Unit): Seq[String] =
+    graft.obs.Plans.capture(spark)(body).map(_._2)
 
   private def sym(pairs: (String, String)*): DataFrame = {
     val fwd = pairs.toSeq.toDF("src", "dst")
