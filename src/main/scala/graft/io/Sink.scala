@@ -1,7 +1,8 @@
 package graft.io
 
-import org.apache.spark.sql.{DataFrame, SaveMode}
-import java.nio.file.{Files, Paths}
+import org.apache.hadoop.fs.{ChecksumFileSystem, Path}
+import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import java.nio.charset.StandardCharsets
 
 /** Output sinks: DRS-style directory layout, deterministic file naming,
   * metadata sidecars, and the status bookkeeping table.
@@ -115,7 +116,7 @@ object Sink {
     // underscore prefix hides it from scans, but NOT "_metadata"/"_common_
     // metadata" — those names are parquet summary files Spark tries to
     // parse as parquet.
-    Files.writeString(Paths.get(dir, "_attrs.json"), json)
+    writeText(df.sparkSession, s"$dir/_attrs.json", json)
     dir
   }
 
@@ -145,7 +146,7 @@ object Sink {
         s"""{"shard": ${r.getLong(0)}, "n_docs": ${r.getLong(1)},""" +
           s""" "sum_size": ${r.getLong(2)}}""")
       .mkString("[", ", ", "]")
-    Files.writeString(Paths.get(root, "_manifest.json"), json)
+    writeText(docs.sparkSession, s"$root/_manifest.json", json)
     root
   }
 
@@ -206,7 +207,7 @@ object Sink {
     derived.foreach { r =>
       line(Seq(s(r.get(0)), s(r.get(1)), "", "", "", version, "derivable"))
     }
-    Files.writeString(Paths.get(path), sb.toString)
+    writeText(sections.sparkSession, path, sb.toString)
   }
 
   /** CMOR table `approx_interval` per frequency (mopdb_utils.py
@@ -258,12 +259,30 @@ object Sink {
     }
     val json = s"""{"Header": $header, "variable_entry": {${
       entries.mkString(", ")}}}"""
-    Files.writeString(Paths.get(path), json)
+    writeText(vars.sparkSession, path, json)
+  }
+
+  /** Write one small text artifact (a sidecar, manifest, template or
+    * table) through the Hadoop FileSystem of its path — the one the
+    * parquet beside it was written through — so a URI root such as
+    * `file:///…` lands where the data did instead of being read as a
+    * relative local path. Overwrites. A checksummed local filesystem is
+    * unwrapped to its raw one: the artifact gets no `.crc` sibling, as
+    * with a plain java.nio write. */
+  private def writeText(spark: SparkSession, path: String,
+      text: String): Unit = {
+    val p = new Path(path)
+    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration) match {
+      case c: ChecksumFileSystem => c.getRawFileSystem
+      case f                     => f
+    }
+    val out = fs.create(p, true)
+    try out.write(text.getBytes(StandardCharsets.UTF_8)) finally out.close()
   }
 
   /** Status bookkeeping (the filelist.status updates of mopper.py
     * 107-112): one appended row per processed task. */
-  def appendStatus(spark: org.apache.spark.sql.SparkSession, statusDir: String,
+  def appendStatus(spark: SparkSession, statusDir: String,
       taskId: String, status: String, rows: Long): Unit = {
     import spark.implicits._
     Seq((taskId, status, rows, java.time.Instant.now().toString))

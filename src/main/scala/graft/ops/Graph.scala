@@ -42,26 +42,53 @@ import org.apache.spark.sql.functions._
   */
 object Graph {
 
-  /** `iters` rounds of damped PageRank over `edges(src, dst)`.
-    * Returns (node, pagerank). `edges` must be distinct and symmetric
-    * (see class doc); `damping` is fixed at 85/100 as exact decimal
-    * weights so no double multiply decides a rank. */
-  def pageRank(edges: DataFrame, iters: Int): DataFrame = {
+  /** `iters` rounds of damped PageRank over `edges(src, dst)` — the
+    * w ≡ 1 call of [[pageRankWeighted]]. Returns (node, pagerank).
+    * `edges` must be distinct and symmetric (see class doc); `damping`
+    * is fixed at 85/100 as exact decimal weights so no double multiply
+    * decides a rank. */
+  def pageRank(edges: DataFrame, iters: Int): DataFrame =
+    pageRankWeighted(unitWeight(edges), iters)
+
+  /** `edges(src, dst)` as the w ≡ 1 frame a unit-weight operator hands
+    * to its weighted kernel (extra columns are dropped, not carried
+    * into the kernel's checkpoints). */
+  private def unitWeight(edges: DataFrame): DataFrame =
+    edges.select(col("src"), col("dst"), lit(1L).as("w"))
+
+  /** Weighted PageRank over `edges(src, dst, w)` — the multigraph
+    * formulation a real link graph needs: a host that links another
+    * fifty times is not the same signal as one link, and the delivery
+    * counts / shared-line counts the projection graphs already carry
+    * ARE those weights. Per round every edge contributes
+    * w · round(r / wout, 6) where wout = Σ w over the node's
+    * out-edges — literally w parallel unit edges each carrying the
+    * same unit share, so [[pageRank]] is the w ≡ 1 call of this
+    * kernel. The ROUNDING happens on the unit share (the proven
+    * r/outdeg shape) and the weight scales it as an exact
+    * decimal×integer product: rounding r·w/wout directly was measured
+    * to diverge at sf0.1 — Spark rounds doubles via the canonical
+    * decimal string (BigDecimal.valueOf), DuckDB via the binary value,
+    * and a product landing on a …5 seventh-decimal boundary splits
+    * them by 1e-6. Same symmetric-frame contract, one join and one
+    * aggregate per round, decimal-exact summation. Returns
+    * (node, pagerank). */
+  def pageRankWeighted(edges: DataFrame, iters: Int): DataFrame = {
     val spark = edges.sparkSession
     import spark.implicits._
-    // materialize the edge frame ONCE — deg and eWithDeg both read it,
-    // and a caller-supplied edge build (a distinct over a fact join)
-    // would otherwise run per consumer. Iterate.cut stamps MEASURED
-    // sizes (r17): the per-round join below sees an accurate
-    // node-sized estimate for the rank vector and auto-broadcasts it
-    // under Spark's own threshold — the edges are then never
-    // re-shuffled in the loop at bench scale, while a corpus-sized
-    // vector at 100 TB exceeds the threshold and keeps the honest
-    // two-sided shuffle join (guide §3.1).
+    // materialize the edge frame ONCE — deg and eW both read it, and a
+    // caller-supplied edge build (a distinct over a fact join) would
+    // otherwise run per consumer. Iterate.cut stamps MEASURED sizes
+    // (r17): the per-round join below sees an accurate node-sized
+    // estimate for the rank vector and auto-broadcasts it under
+    // Spark's own threshold — the edges are then never re-shuffled in
+    // the loop at bench scale, while a corpus-sized vector at 100 TB
+    // exceeds the threshold and keeps the honest two-sided shuffle
+    // join (guide §3.1).
     val e = Iterate.cut(edges)
-    // out-degree and the node universe (= all srcs, by symmetry);
-    // node-sized, reused every round
-    val deg = Iterate.cut(e.groupBy($"src").agg(count(lit(1)).as("outdeg")))
+    // weighted out-degree and the node universe (= all srcs, by
+    // symmetry); node-sized, reused every round
+    val deg = Iterate.cut(e.groupBy($"src").agg(sum($"w").as("wout")))
     // loop constants: N, the uniform start 1/N and the teleport base
     // 0.15/N (both rounded to 6 decimals once — every engine derives
     // later ranks from these exact decimals). Collected ONCE as a
@@ -74,51 +101,6 @@ object Graph {
     // the rank vector rolls through one slot: round k's checkpoint
     // releases round k−1's blocks (Iterate doc — a bare localCheckpoint
     // per round leaks every superseded round for the session)
-    val roll = new Iterate.RollingCheckpoint
-    var ranks = roll.next(deg.select($"src".as("node"), lit(r0).as("r")))
-    val eWithDeg = Iterate.cut(
-      e.join(deg, Seq("src")).select($"src", $"dst", $"outdeg"))
-    for (_ <- 1 to iters) {
-      val contrib = eWithDeg
-        .join(ranks.withColumnRenamed("node", "src"), Seq("src"))
-        .select($"dst", round($"r" / $"outdeg", 6).as("c"))
-      val sums = contrib.groupBy($"dst")
-        .agg(sum($"c".cast("decimal(18,6)")).as("sm"))
-      ranks = roll.next(sums.select($"dst".as("node"),
-        round(lit(base).cast("decimal(18,6)") +
-          expr("CAST(0.85 AS DECIMAL(3,2))") * $"sm", 6)
-          .cast("double").as("r")))
-    }
-    ranks.select($"node", $"r".as("pagerank"))
-  }
-
-  /** Weighted PageRank over `edges(src, dst, w)` — the multigraph
-    * formulation a real link graph needs: a host that links another
-    * fifty times is not the same signal as one link, and the delivery
-    * counts / shared-line counts the projection graphs already carry
-    * ARE those weights. Per round every edge contributes
-    * w · round(r / wout, 6) where wout = Σ w over the node's
-    * out-edges — literally w parallel unit edges each carrying the
-    * same unit share, so [[pageRank]] is the w ≡ 1 special case. The
-    * ROUNDING happens on the unit share (the proven r/outdeg shape)
-    * and the weight scales it as an exact decimal×integer product:
-    * rounding r·w/wout directly was measured to diverge at sf0.1 —
-    * Spark rounds doubles via the canonical decimal string
-    * (BigDecimal.valueOf), DuckDB via the binary value, and a
-    * product landing on a …5 seventh-decimal boundary splits them by
-    * 1e-6. Same symmetric-frame contract, same one-join-one-aggregate
-    * round shape, decimal-exact summation. Returns (node, pagerank). */
-  def pageRankWeighted(edges: DataFrame, iters: Int): DataFrame = {
-    val spark = edges.sparkSession
-    import spark.implicits._
-    // measured-size checkpoints + collected loop constants — see
-    // [[pageRank]] (identical arithmetic, weighted shares)
-    val e = Iterate.cut(edges)
-    val deg = Iterate.cut(e.groupBy($"src").agg(sum($"w").as("wout")))
-    val c0 = deg.agg(count(lit(1)).as("n"))
-      .select(round(lit(1.0) / $"n", 6).as("r0"),
-        round(lit(0.15) / $"n", 6).as("base")).head()
-    val (r0, base) = (c0.getDouble(0), c0.getDouble(1))
     val roll = new Iterate.RollingCheckpoint
     var ranks = roll.next(deg.select($"src".as("node"), lit(r0).as("r")))
     val eW = Iterate.cut(
@@ -140,32 +122,48 @@ object Graph {
 
   /** Oracle twin of [[pageRankWeighted]] over a caller-defined
     * `edw(src, dst, w)` CTE; exposes `wprout(node, pagerank)`. */
-  def pageRankWeightedSql(iters: Int): String = {
-    val head = """
-      wdeg AS (SELECT src, CAST(SUM(w) AS BIGINT) AS wout
-               FROM edw GROUP BY src),
-      wnn AS (SELECT CAST(COUNT(*) AS BIGINT) AS n,
+  def pageRankWeightedSql(iters: Int): String =
+    pageRankChainSql("w", "edw", iters)
+
+  /** Oracle twin of [[pageRank]]: the `WITH`-clause body (no leading
+    * WITH) that walks the identical iteration chain in DuckDB over an
+    * `ed(src, dst)` CTE the caller defines — the weighted chain over a
+    * w ≡ 1 `pred` CTE. Exposes `prout(node, pagerank)`. */
+  def pageRankSql(iters: Int): String = """
+      pred AS (SELECT src, dst, CAST(1 AS BIGINT) AS w FROM ed),""" +
+    pageRankChainSql("", "pred", iters)
+
+  /** The oracle PageRank chain shared by both twins over
+    * `$edges(src, dst, w)`: `p` prefixes every CTE name, so the two
+    * twins' chains can sit in one WITH clause. Exposes
+    * `${p}prout(node, pagerank)`. */
+  private def pageRankChainSql(p: String, edges: String,
+      iters: Int): String = {
+    val head = s"""
+      ${p}deg AS (SELECT src, CAST(SUM(w) AS BIGINT) AS wout
+               FROM $edges GROUP BY src),
+      ${p}nn AS (SELECT CAST(COUNT(*) AS BIGINT) AS n,
                round(CAST(1 AS DOUBLE) / COUNT(*), 6) AS r0,
                round(CAST(0.15 AS DOUBLE) / COUNT(*), 6) AS base
-             FROM wdeg),
-      wpr0 AS (SELECT src AS node, r0 AS r FROM wdeg, wnn)"""
+             FROM ${p}deg),
+      ${p}pr0 AS (SELECT src AS node, r0 AS r FROM ${p}deg, ${p}nn)"""
     val steps = (1 to iters).map { k =>
       s"""
-      wsm$k AS (
+      ${p}sm$k AS (
         SELECT e.dst AS node,
           SUM(CAST(round(r.r / d.wout, 6) AS DECIMAL(18,6)) * e.w) AS sm
-        FROM edw e
-        JOIN wpr${k - 1} r ON e.src = r.node
-        JOIN wdeg d ON e.src = d.src
+        FROM $edges e
+        JOIN ${p}pr${k - 1} r ON e.src = r.node
+        JOIN ${p}deg d ON e.src = d.src
         GROUP BY e.dst),
-      wpr$k AS (
+      ${p}pr$k AS (
         SELECT node,
           CAST(round(CAST(base AS DECIMAL(18,6)) +
             CAST(0.85 AS DECIMAL(3,2)) * sm, 6) AS DOUBLE) AS r
-        FROM wsm$k, wnn)"""
+        FROM ${p}sm$k, ${p}nn)"""
     }.mkString(",")
-    s"$head,$steps,\n      wprout AS " +
-      s"(SELECT node, r AS pagerank FROM wpr$iters)"
+    s"$head,$steps,\n      ${p}prout AS " +
+      s"(SELECT node, r AS pagerank FROM ${p}pr$iters)"
   }
 
   /** Directed PageRank with dangling-mass redistribution — the
@@ -484,12 +482,27 @@ object Graph {
     *
     * Per round: ONE equi-join of the node-sized label vector into the
     * data-sized symmetric edges, one map-side-combined (node, label)
-    * count, one per-node top-1 (WindowGroupLimit pushes the rank into
-    * the shuffle), and the seed clamp as a node-keyed left join.
-    * Rolling checkpoint per round. `edges(src, dst)` symmetric
+    * count, one per-node aggregate argmin, and the seed clamp as a
+    * node-keyed left join. Rolling checkpoint per round. The w ≡ 1
+    * call of [[labelPropagateWeighted]]. `edges(src, dst)` symmetric
     * distinct; `seeds(node, label)`. Returns (node, label), label
     * null where diffusion never arrived. */
   def labelPropagate(edges: DataFrame, seeds: DataFrame,
+      rounds: Int): DataFrame =
+    labelPropagateWeighted(unitWeight(edges), seeds, rounds)
+
+  /** [[labelPropagate]] over a WEIGHTED symmetric edge frame
+    * `edges(src, dst, w)`: a neighbor's vote counts w times — fifty
+    * shared boilerplate lines (or deliveries, or near-dup pairs) are
+    * stronger affinity evidence than one, exactly the
+    * [[pageRankWeighted]] argument applied to diffusion. Masses are
+    * exact INTEGER weight sums, so the trajectory keeps
+    * [[labelPropagate]]'s float-free determinism (total order: mass
+    * desc, label asc; seeds clamped every round); [[labelPropagate]]
+    * is the w ≡ 1 call of this kernel. Same per-round shape: one
+    * edges⋈labels join, one map-side-combined (node, label) weight
+    * sum, one aggregate argmin, the seed-clamp left join. */
+  def labelPropagateWeighted(edges: DataFrame, seeds: DataFrame,
       rounds: Int): DataFrame = {
     val spark = edges.sparkSession
     import spark.implicits._
@@ -509,7 +522,7 @@ object Graph {
         .join(lab.select($"node".as("src"), $"label"), Seq("src"))
         .filter($"label".isNotNull)
         .groupBy($"dst".as("node"), $"label")
-        .agg(count(lit(1)).as("__m"))
+        .agg(sum($"w").as("__m"))
       // aggregate argmin, not the window top-1 (r18): same (mass desc,
       // label asc) total order via negated mass; sorts only by the
       // group key and partial-aggregates map-side (see argMinPerGroup)
@@ -523,105 +536,51 @@ object Graph {
     lab
   }
 
-  /** [[labelPropagate]] over a WEIGHTED symmetric edge frame
-    * `edges(src, dst, w)`: a neighbor's vote counts w times — fifty
-    * shared boilerplate lines (or deliveries, or near-dup pairs) are
-    * stronger affinity evidence than one, exactly the
-    * [[pageRankWeighted]] argument applied to diffusion. Masses are
-    * exact INTEGER weight sums, so the trajectory keeps
-    * [[labelPropagate]]'s float-free determinism (total order: mass
-    * desc, label asc; seeds clamped every round); w ≡ 1 collapses to
-    * the unweighted operator. Same per-round shape: one edges⋈labels
-    * join, one map-side-combined (node, label) weight sum, one
-    * WindowGroupLimit top-1, the seed-clamp left join. */
-  def labelPropagateWeighted(edges: DataFrame, seeds: DataFrame,
-      rounds: Int): DataFrame = {
-    val spark = edges.sparkSession
-    import spark.implicits._
-    // same hoisted-seed-join shape as [[labelPropagate]]
-    val e = Iterate.cut(edges)
-    val nsd = Iterate.cut(
-      e.select($"src".as("node")).distinct()
-        .join(seeds.select($"node", $"label".as("__seed")),
-          Seq("node"), "left"))
-    val roll = new Iterate.RollingCheckpoint
-    var lab = roll.next(nsd.select($"node", $"__seed".as("label")))
-    for (_ <- 1 to rounds) {
-      val mass = e
-        .join(lab.select($"node".as("src"), $"label"), Seq("src"))
-        .filter($"label".isNotNull)
-        .groupBy($"dst".as("node"), $"label")
-        .agg(sum($"w").as("__m"))
-      // same aggregate argmin as [[labelPropagate]] (r18)
-      val best = Relational.argMinPerGroup(mass, Seq($"node"),
-        struct((-$"__m").as("o1"), $"label".as("o2")))
-        .select($"node", $"label".as("__best"))
-      lab = roll.next(nsd
-        .join(best, Seq("node"), "left")
-        .select($"node", coalesce($"__seed", $"__best").as("label")))
-    }
-    lab
-  }
-
   /** Oracle twin of [[labelPropagateWeighted]] over caller-defined
     * `edw(src, dst, w)` (symmetric) and `seeds(node, label)` CTEs;
     * exposes `wlpout(node, label)`. */
-  def labelPropagateWeightedSql(rounds: Int): String = {
-    val head = """
-      wlnodes AS (SELECT DISTINCT src AS node FROM edw),
-      wlp0 AS (
-        SELECT n.node, s.label
-        FROM wlnodes n LEFT JOIN seeds s ON n.node = s.node)"""
-    val steps = (1 to rounds).map { k =>
-      s"""
-      wlmass$k AS (
-        SELECT e.dst AS node, r.label, CAST(SUM(e.w) AS BIGINT) AS m
-        FROM edw e JOIN wlp${k - 1} r ON e.src = r.node
-        WHERE r.label IS NOT NULL
-        GROUP BY e.dst, r.label),
-      wlbest$k AS (
-        SELECT node, label FROM (
-          SELECT *, ROW_NUMBER() OVER (PARTITION BY node
-                      ORDER BY m DESC, label) AS rk
-          FROM wlmass$k) WHERE rk = 1),
-      wlp$k AS (
-        SELECT n.node, COALESCE(s.label, b.label) AS label
-        FROM wlnodes n
-        LEFT JOIN seeds s ON n.node = s.node
-        LEFT JOIN wlbest$k b ON n.node = b.node)"""
-    }.mkString(",")
-    s"$head,$steps,\n      wlpout AS " +
-      s"(SELECT node, label FROM wlp$rounds)"
-  }
+  def labelPropagateWeightedSql(rounds: Int): String =
+    labelPropagateChainSql("w", "edw", rounds)
 
   /** Oracle twin of [[labelPropagate]] over caller-defined
-    * `ed(src, dst)` (symmetric) and `seeds(node, label)` CTEs; exposes
+    * `ed(src, dst)` (symmetric) and `seeds(node, label)` CTEs — the
+    * weighted chain over a w ≡ 1 `lped` CTE; exposes
     * `lpout(node, label)`. */
-  def labelPropagateSql(rounds: Int): String = {
-    val head = """
-      lnodes AS (SELECT DISTINCT src AS node FROM ed),
-      lp0 AS (
+  def labelPropagateSql(rounds: Int): String = """
+      lped AS (SELECT src, dst, CAST(1 AS BIGINT) AS w FROM ed),""" +
+    labelPropagateChainSql("", "lped", rounds)
+
+  /** The oracle label-propagation chain shared by both twins over
+    * `$edges(src, dst, w)` and `seeds(node, label)`: `p` prefixes
+    * every CTE name, so the two twins' chains can sit in one WITH
+    * clause. Exposes `${p}lpout(node, label)`. */
+  private def labelPropagateChainSql(p: String, edges: String,
+      rounds: Int): String = {
+    val head = s"""
+      ${p}lnodes AS (SELECT DISTINCT src AS node FROM $edges),
+      ${p}lp0 AS (
         SELECT n.node, s.label
-        FROM lnodes n LEFT JOIN seeds s ON n.node = s.node)"""
+        FROM ${p}lnodes n LEFT JOIN seeds s ON n.node = s.node)"""
     val steps = (1 to rounds).map { k =>
       s"""
-      lmass$k AS (
-        SELECT e.dst AS node, r.label, CAST(COUNT(*) AS BIGINT) AS m
-        FROM ed e JOIN lp${k - 1} r ON e.src = r.node
+      ${p}lmass$k AS (
+        SELECT e.dst AS node, r.label, CAST(SUM(e.w) AS BIGINT) AS m
+        FROM $edges e JOIN ${p}lp${k - 1} r ON e.src = r.node
         WHERE r.label IS NOT NULL
         GROUP BY e.dst, r.label),
-      lbest$k AS (
+      ${p}lbest$k AS (
         SELECT node, label FROM (
           SELECT *, ROW_NUMBER() OVER (PARTITION BY node
                       ORDER BY m DESC, label) AS rk
-          FROM lmass$k) WHERE rk = 1),
-      lp$k AS (
+          FROM ${p}lmass$k) WHERE rk = 1),
+      ${p}lp$k AS (
         SELECT n.node, COALESCE(s.label, b.label) AS label
-        FROM lnodes n
+        FROM ${p}lnodes n
         LEFT JOIN seeds s ON n.node = s.node
-        LEFT JOIN lbest$k b ON n.node = b.node)"""
+        LEFT JOIN ${p}lbest$k b ON n.node = b.node)"""
     }.mkString(",")
-    s"$head,$steps,\n      lpout AS (SELECT node, label FROM lp$rounds)"
+    s"$head,$steps,\n      ${p}lpout AS " +
+      s"(SELECT node, label FROM ${p}lp$rounds)"
   }
 
   /** Oracle twin of [[pageRankDirected]] over a caller-defined
@@ -1297,25 +1256,34 @@ object Graph {
       sum(when($"ldst" === $"lsrc", 1L).otherwise(0L)).as("e_in"))
       .transform(Iterate.cut)
     val m2 = per.agg(sum($"d_c").as("m2"))
-    // products in decimal(38,0), not long (r12 advice): m2·e_in and
-    // m2·m2 wrap 64-bit arithmetic once m2 exceeds ~3.04e9 edge-ends
-    // — real at the 100 TB target — while the decimal products stay
-    // exact for any long-sized input (the assortativityR convention).
-    // Same cast in [[modularityAllTagged]], keeping the two bit-equal.
-    def dec(c: Column): Column = c.cast("decimal(38,0)")
     val terms = per.crossJoin(broadcast(m2))
       .select($"label", $"n_nodes", $"d_c", $"e_in",
-        round((dec($"m2") * $"e_in" - dec($"d_c") * $"d_c").cast("double") /
-          (dec($"m2") * $"m2").cast("double"), 6).as("q_term"))
+        qTerm($"m2", $"e_in", dec($"d_c") * $"d_c").as("q_term"))
     val total = per.agg(sum($"n_nodes").as("n_nodes"),
         sum($"d_c").as("d_c"), sum($"e_in").as("e_in"),
         sum(dec($"d_c") * $"d_c").as("sd2"))
       .crossJoin(broadcast(m2))
       .select(lit("__all__").as("label"), $"n_nodes", $"d_c", $"e_in",
-        round((dec($"m2") * $"e_in" - $"sd2").cast("double") /
-          (dec($"m2") * $"m2").cast("double"), 6).as("q_term"))
+        qTerm($"m2", $"e_in", $"sd2").as("q_term"))
     terms.unionByName(total)
   }
+
+  /** Exact integer products: decimal(38,0), not long (r12 advice) —
+    * m₂·e_in, m₂·m₂ and d_c² wrap 64-bit arithmetic once m₂ exceeds
+    * ~3.04e9 edge-ends (real at the 100 TB target, and the scale tier
+    * multiplies m₂ toward it), while the decimal products stay exact
+    * for any long-sized input. The oracle twins compute the same
+    * products in HUGEINT. */
+  private def dec(c: Column): Column = c.cast("decimal(38,0)")
+
+  /** One modularity term round((m₂·e_in − Σd²) / m₂², 6) from exact
+    * integer inputs (`sd2` already a [[dec]] product or sum): ONE
+    * deterministic IEEE division, so a community's q_c and the
+    * '__all__' Q are bit-equal across every operator that scores a
+    * partition. */
+  private def qTerm(m2: Column, eIn: Column, sd2: Column): Column =
+    round((dec(m2) * eIn - sd2).cast("double") /
+      (dec(m2) * m2).cast("double"), 6)
 
   /** Newman assortativity r from the edge-end integer sums
     * `(m_edges, s_j, s_jk, s_j2)`:
@@ -1330,12 +1298,11 @@ object Graph {
     * The DuckDB twin computes the same products in HUGEINT (also
     * exact) — see q231's oracle SQL. */
   def assortativityR(sums: DataFrame): DataFrame = {
-    def d(c: Column): Column = c.cast("decimal(38,0)")
     sums.select(col("m_edges"), col("s_j"), col("s_jk"), col("s_j2"),
       round(
-        (d(col("m_edges")) * col("s_jk") - d(col("s_j")) * col("s_j"))
+        (dec(col("m_edges")) * col("s_jk") - dec(col("s_j")) * col("s_j"))
           .cast("double") /
-        (d(col("m_edges")) * col("s_j2") - d(col("s_j")) * col("s_j"))
+        (dec(col("m_edges")) * col("s_j2") - dec(col("s_j")) * col("s_j"))
           .cast("double"), 6).as("r_assort"))
   }
 
@@ -1415,13 +1382,13 @@ object Graph {
     * self-loop-free; `comm(node, label)` total over graph nodes.
     * Returns the new (node, label). */
   def louvainMove(edges: DataFrame, comm: DataFrame): DataFrame =
-    louvainMoveWeighted(edges.withColumn("w", lit(1L)), comm)
+    louvainMoveWeighted(unitWeight(edges), comm)
 
   /** [[louvainMove]] with a caller-precomputed degree frame — see the
     * weighted overload for the contract. */
   def louvainMove(edges: DataFrame, deg: DataFrame,
       comm: DataFrame): DataFrame =
-    louvainMoveWeighted(edges.withColumn("w", lit(1L)), deg, comm)
+    louvainMoveWeighted(unitWeight(edges), deg, comm)
 
   /** [[louvainMove]] over a WEIGHTED symmetric frame
     * `edges(src, dst, w)` that may carry self-rows (the [[contract]]
@@ -1490,7 +1457,6 @@ object Graph {
       accept: DataFrame => DataFrame): DataFrame = {
     val spark = edges.sparkSession
     import spark.implicits._
-    def dec(c: Column): Column = c.cast("decimal(38,0)")
     // γ-scaling helpers: identity at 1 so the γ=1 plan is bit-identical
     def gN(c: Column): Column = if (gammaNum == 1L) c else c * lit(gammaNum)
     def gD(c: Column): Column = if (gammaDen == 1L) c else c * lit(gammaDen)
@@ -1749,7 +1715,6 @@ object Graph {
   private def acceptBatch(prop: DataFrame, gammaNum: Long): DataFrame = {
     val spark = prop.sparkSession
     import spark.implicits._
-    def dec(c: Column): Column = c.cast("decimal(38,0)")
     def gN(c: Column): Column = if (gammaNum == 1L) c else c * lit(gammaNum)
     val touch = prop
       .select($"node", $"c0".as("cmty"), lit("out").as("mode"), $"g", $"k")
@@ -1944,33 +1909,22 @@ object Graph {
     * `edges(src, dst)` symmetric distinct; `comm(node, label)` total.
     * Output: symmetric weighted rows (src, dst, w) over labels,
     * self-rows included. */
-  def contract(edges: DataFrame, comm: DataFrame): DataFrame = {
-    val spark = edges.sparkSession
-    import spark.implicits._
-    edges
-      .join(comm.select($"node".as("src"), $"label".as("lsrc")), Seq("src"))
-      .join(comm.select($"node".as("dst"), $"label".as("ldst")), Seq("dst"))
-      .groupBy($"lsrc".as("src"), $"ldst".as("dst"))
-      .agg(count(lit(1)).as("w"))
-  }
+  def contract(edges: DataFrame, comm: DataFrame): DataFrame =
+    contractWeighted(unitWeight(edges), comm)
 
   /** Oracle twin of [[contract]] over caller-defined `ed(src, dst)`
-    * and `$comm(node, label)` CTEs; exposes `ctout(src, dst, w)`. */
-  def contractSql(comm: String): String = s"""
-      ctout AS (
-        SELECT cs.label AS src, cd.label AS dst,
-               CAST(COUNT(*) AS BIGINT) AS w
-        FROM ed e
-        JOIN $comm cs ON e.src = cs.node
-        JOIN $comm cd ON e.dst = cd.node
-        GROUP BY 1, 2)"""
+    * and `$comm(node, label)` CTEs — the weighted twin's CTE over a
+    * w ≡ 1 `cted` CTE; exposes `ctout(src, dst, w)`. */
+  def contractSql(comm: String): String = """
+      cted AS (SELECT src, dst, CAST(1 AS BIGINT) AS w FROM ed),""" +
+    contractChainSql("", "cted", comm, "")
 
   /** [[contract]] for an already-WEIGHTED symmetric frame
     * `edges(src, dst, w)` (self-rows allowed) — the level-3+ boundary
     * of the full Louvain loop (q244): parallel weights SUM instead of
     * count, so contracting a contracted graph keeps every community's
-    * (d_c, e_in) and therefore Q invariant, level after level. A w ≡ 1
-    * self-row-free input collapses to [[contract]]. Same single
+    * (d_c, e_in) and therefore Q invariant, level after level.
+    * [[contract]] is the w ≡ 1 call of this kernel. Same single
     * label-attach join per edge end + (label, label)-sized groupBy. */
   def contractWeighted(edges: DataFrame, comm: DataFrame): DataFrame = {
     val spark = edges.sparkSession
@@ -1986,8 +1940,13 @@ object Graph {
     * `$edges(src, dst, w)` and `$comm(node, label)` CTEs; exposes
     * `wctout$sfx(src, dst, w)`. */
   def contractWeightedSql(edges: String, comm: String,
+      sfx: String): String = contractChainSql("w", edges, comm, sfx)
+
+  /** The oracle contraction CTE shared by both twins over
+    * `$edges(src, dst, w)`; exposes `${p}ctout$sfx(src, dst, w)`. */
+  private def contractChainSql(p: String, edges: String, comm: String,
       sfx: String): String = s"""
-      wctout$sfx AS (
+      ${p}ctout$sfx AS (
         SELECT cs.label AS src, cd.label AS dst,
                CAST(SUM(e.w) AS BIGINT) AS w
         FROM $edges e
@@ -2018,17 +1977,14 @@ object Graph {
       sum(when($"ldst" === $"lsrc", $"w").otherwise(0L)).as("e_in"))
       .transform(Iterate.cut)
     val m2 = per.agg(sum($"d_c").as("m2"))
-    def dec(c: Column): Column = c.cast("decimal(38,0)")
     val terms = per.crossJoin(broadcast(m2))
       .select($"label", $"d_c", $"e_in",
-        round((dec($"m2") * $"e_in" - dec($"d_c") * $"d_c").cast("double") /
-          (dec($"m2") * $"m2").cast("double"), 6).as("q_term"))
+        qTerm($"m2", $"e_in", dec($"d_c") * $"d_c").as("q_term"))
     val total = per.agg(sum($"d_c").as("d_c"), sum($"e_in").as("e_in"),
         sum(dec($"d_c") * $"d_c").as("sd2"))
       .crossJoin(broadcast(m2))
       .select(lit("__all__").as("label"), $"d_c", $"e_in",
-        round((dec($"m2") * $"e_in" - $"sd2").cast("double") /
-          (dec($"m2") * $"m2").cast("double"), 6).as("q_term"))
+        qTerm($"m2", $"e_in", $"sd2").as("q_term"))
     terms.unionByName(total)
   }
 
@@ -2065,48 +2021,28 @@ object Graph {
         FROM wmper$sfx, wmtot$sfx m GROUP BY m.m2)"""
 
   /** The '__all__' Q of [[modularity]] for SEVERAL partitions of the
-    * SAME graph in one pass — the scoring shape a sweep trajectory
-    * needs (q235/q244 score every sweep): `labeled(tag, node, label)`
-    * carries each partition under its tag, so ONE edges⋈labels join
-    * per edge end (the per-tag fan-out rides the join rows, not extra
-    * shuffles) replaces one join pair PER partition, and the
-    * (tag, label)-sized groupBy replaces per-partition aggregates +
-    * their checkpoint barriers. Arithmetic is IDENTICAL to
-    * [[modularity]]'s total row (long products, one rounded IEEE
-    * division), so the q values are bit-equal by construction.
-    * Output: (tag, q). */
-  def modularityAllTagged(edges: DataFrame, labeled: DataFrame): DataFrame = {
-    val spark = edges.sparkSession
-    import spark.implicits._
-    val e2 = edges
-      .join(labeled.select($"tag", $"node".as("src"), $"label".as("lsrc")),
-        Seq("src"))
-      .join(labeled.select($"tag", $"node".as("dst"), $"label".as("ldst")),
-        Seq("dst", "tag"))
-    // decimal(38,0) products, exactly as [[modularity]]'s total row
-    // (r12 advice: both moved off long together — the long products
-    // wrap once m2 exceeds ~3.04e9 edge-ends, and the scale tier
-    // multiplies m2 by `copies` toward that threshold)
-    def dec(c: Column): Column = c.cast("decimal(38,0)")
-    e2.groupBy($"tag", $"lsrc").agg(
-        count(lit(1)).as("d_c"),
-        sum(when($"ldst" === $"lsrc", 1L).otherwise(0L)).as("e_in"))
-      .groupBy($"tag").agg(sum($"d_c").as("m2"), sum($"e_in").as("e_in"),
-        sum(dec($"d_c") * $"d_c").as("sd2"))
-      .select($"tag",
-        round((dec($"m2") * $"e_in" - $"sd2").cast("double") /
-          (dec($"m2") * $"m2").cast("double"), 6).as("q"))
-  }
+    * SAME graph in one pass — the w ≡ 1 call of
+    * [[modularityWeightedAllTagged]], so the q values are bit-equal to
+    * [[modularity]]'s total row by construction. `edges(src, dst)`
+    * symmetric distinct; `labeled(tag, node, label)`. Output:
+    * (tag, q). */
+  def modularityAllTagged(edges: DataFrame, labeled: DataFrame): DataFrame =
+    modularityWeightedAllTagged(unitWeight(edges), labeled)
 
-  /** [[modularityAllTagged]] over a WEIGHTED frame `edges(src, dst,
-    * w)` that may carry self-rows — arithmetic identical to
-    * [[modularityWeighted]]'s total row (decimal(38,0) products).
-    * Output: (tag, q). */
+  /** The '__all__' Q of [[modularityWeighted]] for SEVERAL partitions
+    * of the same WEIGHTED frame `edges(src, dst, w)` (self-rows
+    * allowed) in one pass — the scoring shape a sweep trajectory needs
+    * (q235/q244 score every sweep): `labeled(tag, node, label)` carries
+    * each partition under its tag, so ONE edges⋈labels join per edge
+    * end (the per-tag fan-out rides the join rows, not extra shuffles)
+    * replaces one join pair PER partition, and the (tag, label)-sized
+    * groupBy replaces per-partition aggregates + their checkpoint
+    * barriers. Arithmetic is the total row's ([[qTerm]] over the
+    * integer totals). Output: (tag, q). */
   def modularityWeightedAllTagged(edges: DataFrame,
       labeled: DataFrame): DataFrame = {
     val spark = edges.sparkSession
     import spark.implicits._
-    def dec(c: Column): Column = c.cast("decimal(38,0)")
     val e2 = edges
       .join(labeled.select($"tag", $"node".as("src"), $"label".as("lsrc")),
         Seq("src"))
@@ -2117,9 +2053,7 @@ object Graph {
         sum(when($"ldst" === $"lsrc", $"w").otherwise(0L)).as("e_in"))
       .groupBy($"tag").agg(sum($"d_c").as("m2"), sum($"e_in").as("e_in"),
         sum(dec($"d_c") * $"d_c").as("sd2"))
-      .select($"tag",
-        round((dec($"m2") * $"e_in" - $"sd2").cast("double") /
-          (dec($"m2") * $"m2").cast("double"), 6).as("q"))
+      .select($"tag", qTerm($"m2", $"e_in", $"sd2").as("q"))
   }
 
   /** Community conductance φ(c) = cut(c) / min(vol(c), vol(rest)) —
@@ -2196,35 +2130,5 @@ object Graph {
         (SELECT CAST(COUNT(*) AS BIGINT) FROM e$r) AS n_edges"""
     }.mkString("\n      UNION ALL ")
     s"$head,$steps,\n      kcout AS (\n      $rows)"
-  }
-
-  /** Oracle twin: the `WITH`-clause body (no leading WITH) that walks
-    * the identical iteration chain in DuckDB over an `ed(src, dst)`
-    * CTE the caller defines. Exposes `prout(node, pagerank)`. */
-  def pageRankSql(iters: Int): String = {
-    val head = """
-      deg AS (SELECT src, CAST(COUNT(*) AS BIGINT) AS outdeg
-              FROM ed GROUP BY src),
-      nn AS (SELECT CAST(COUNT(*) AS BIGINT) AS n,
-               round(CAST(1 AS DOUBLE) / COUNT(*), 6) AS r0,
-               round(CAST(0.15 AS DOUBLE) / COUNT(*), 6) AS base
-             FROM deg),
-      pr0 AS (SELECT src AS node, r0 AS r FROM deg, nn)"""
-    val steps = (1 to iters).map { k =>
-      s"""
-      sm$k AS (
-        SELECT e.dst AS node,
-          SUM(CAST(round(r.r / d.outdeg, 6) AS DECIMAL(18,6))) AS sm
-        FROM ed e
-        JOIN pr${k - 1} r ON e.src = r.node
-        JOIN deg d ON e.src = d.src
-        GROUP BY e.dst),
-      pr$k AS (
-        SELECT node,
-          CAST(round(CAST(base AS DECIMAL(18,6)) +
-            CAST(0.85 AS DECIMAL(3,2)) * sm, 6) AS DOUBLE) AS r
-        FROM sm$k, nn)"""
-    }.mkString(",")
-    s"$head,$steps,\n      prout AS (SELECT node, r AS pagerank FROM pr$iters)"
   }
 }

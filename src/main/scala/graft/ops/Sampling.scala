@@ -198,25 +198,15 @@ object Sampling {
     * engines.
     *
     * Input: per-document rows with a domain column and a loss column
-    * (any per-doc loss proxy — bigram-LM NLL in q167). Output:
-    * (domain, n_docs, mean_loss, excess, weight), Σ weight = 1. */
+    * (any per-doc loss proxy). Output:
+    * (domain, n_docs, mean_loss, excess, weight), Σ weight = 1. The
+    * per-document-mean call of [[doremiReweightWeighted]]: num = loss
+    * and den = 1 on every non-null loss, so Σ den is count(loss) and a
+    * null loss counts toward n_docs but not toward the mean. */
   def doremiReweight(losses: DataFrame, domain: Column, loss: Column,
-      eta: Double, smooth: Double): DataFrame = {
-    val perDom = losses.groupBy(domain.as("domain"))
-      .agg(count(lit(1)).as("n_docs"), Exact.davg(loss).as("mean_loss"))
-    val base = perDom.agg(min(col("mean_loss")).as("__base"))
-    val scored = perDom.crossJoin(broadcast(base))
-      .withColumn("excess", round(col("mean_loss") - col("__base"), 6))
-      .withColumn("__e", round(exp(lit(eta) * col("excess")), 6))
-    val tot = scored.agg(Exact.dsumFine(col("__e")).as("__tot"),
-      count(lit(1)).cast("double").as("__nd"))
-    scored.crossJoin(broadcast(tot))
-      .withColumn("weight",
-        round(lit(1.0 - smooth) * (col("__e") / col("__tot")) +
-          lit(smooth) / col("__nd"), 6))
-      .select(col("domain"), col("n_docs"), col("mean_loss"),
-        col("excess"), col("weight"))
-  }
+      eta: Double, smooth: Double): DataFrame =
+    doremiReweightWeighted(losses, domain, num = loss,
+      den = when(loss.isNotNull, lit(1L)), eta, smooth)
 
   /** [[doremiReweight]] with a RATIO loss — the domain loss is
     * Σ num / Σ den instead of a mean of per-document divisions. With
@@ -254,28 +244,6 @@ object Sampling {
     ddom AS (
       SELECT domain, CAST(COUNT(*) AS BIGINT) AS n_docs,
         ${Exact.sqlSum("num")} / CAST(SUM(den) AS DOUBLE) AS mean_loss
-      FROM dl GROUP BY domain),
-    dex AS (
-      SELECT domain, n_docs, mean_loss,
-        round(mean_loss - (SELECT MIN(mean_loss) FROM ddom), 6) AS excess
-      FROM ddom),
-    des AS (
-      SELECT *, round(exp(${eta}e0 * excess), 6) AS e FROM dex),
-    dtot AS (
-      SELECT ${Exact.sqlSumFine("e")} AS tot,
-        CAST(COUNT(*) AS DOUBLE) AS nd FROM des),
-    doremi AS (
-      SELECT domain, n_docs, mean_loss, excess,
-        round(${1.0 - smooth}e0 * (e / (SELECT tot FROM dtot)) +
-          ${smooth}e0 / (SELECT nd FROM dtot), 6) AS weight
-      FROM des)"""
-
-  /** DuckDB twin of [[doremiReweight]] over a CTE `dl(domain, loss)` —
-    * ends in `doremi(domain, n_docs, mean_loss, excess, weight)`. */
-  def doremiSql(eta: Double, smooth: Double): String = s"""
-    ddom AS (
-      SELECT domain, CAST(COUNT(*) AS BIGINT) AS n_docs,
-        ${Exact.sqlAvg("loss")} AS mean_loss
       FROM dl GROUP BY domain),
     dex AS (
       SELECT domain, n_docs, mean_loss,

@@ -282,25 +282,12 @@ object Sketch {
     * (RankSketchSpec pins both). State: ≤ shards·k rows per key,
     * independent of n.
     *
-    * Output: (key, shard, x, r, delta). */
+    * Output: (key, shard, x, r, delta). The unit-weight call of
+    * [[rankSketchWeighted]]: with every w = 1 the running weight sum
+    * IS row_number, so its kept-rank rule is the one above. */
   def rankSketch(df: DataFrame, key: Column, value: Column, id: Column,
-      shards: Int, k: Int): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    val base = df.select(key.as("key"), value.as("x"), id.as("__id"),
-      (TextOps.h64(id.cast("string")) % shards).as("shard"))
-    val w = Window.partitionBy(col("key"), col("shard"))
-      .orderBy(col("x").asc, col("__id").asc)
-    val wAll = Window.partitionBy(col("key"), col("shard"))
-    val kept = base
-      .withColumn("r", row_number().over(w).cast("long"))
-      .withColumn("m", count(lit(1)).over(wAll))
-      .filter(expr(s"(r * $k) div m > ((r - 1) * $k) div m"))
-    val wKept = Window.partitionBy(col("key"), col("shard"))
-      .orderBy(col("r").asc)
-    kept.select(col("key"), col("shard"), col("x"), col("r"),
-      (col("r") - coalesce(lag(col("r"), 1).over(wKept), lit(0L)))
-        .as("delta"))
-  }
+      shards: Int, k: Int): DataFrame =
+    rankSketchWeighted(df, key, value, weight = lit(1L), id, shards, k)
 
   /** WEIGHTED [[rankSketch]]: rank mass is a per-row weight (tokens,
     * bytes, sample multiplicity) instead of 1 — the batch half of the
@@ -314,8 +301,9 @@ object Sketch {
     * interval (cw−w, cw] contains a target ⌈i·W/k⌉, the first-
     * crossing set of the stream compressor (for integer cum c,
     * c < ⌈z⌉ ⟺ c < z, so floor-crossing ≡ first-crossing), and for
-    * unit weights cw = row_number so this IS [[rankSketch]] row for
-    * row (pinned in RankSketchSpec). The last row (cw = W) is always
+    * unit weights cw = row_number, so [[rankSketch]] is the w ≡ 1
+    * call of this kernel (its row-for-row equality is pinned in
+    * RankSketchSpec). The last row (cw = W) is always
     * kept; a shard whose every row crosses a target keeps everything
     * — exact below resolution, like the unit sketch. Weights must be
     * ≥ 1: a zero-weight row crosses nothing and silently drops.

@@ -45,6 +45,12 @@ object TextOps {
   /** Whitespace tokenization. */
   def tokens(text: Column): Column = split(trim(text), "\\s+")
 
+  /** (doc, token) rows with multiplicity from a `documents`-shaped
+    * frame (doc_id, text) — the token-row input of [[qualityScore]],
+    * [[simhash]], [[tfidf]] and Retrieval.bm25Index. */
+  def tokenRows(docs: DataFrame): DataFrame =
+    docs.select(col("doc_id").as("doc"), explode(tokens(col("text"))).as("token"))
+
   /** Word w-shingles (w consecutive tokens joined by a space) —
     * Broder-style document shingling over an array column named
     * `tsCol`. Empty if the doc has < w tokens. */
@@ -695,9 +701,7 @@ object TextOps {
     * short | low_quality | duplicate | kept. `docs` needs columns
     * (doc_id, text, source, n_chars). */
   def corpusDecisions(docs: DataFrame): DataFrame = {
-    val tokenRows = docs.select(col("doc_id").as("doc"),
-      explode(tokens(col("text"))).as("token"))
-    val quality = qualityScore(tokenRows, Seq("the", "a", "of", "and"))
+    val quality = qualityScore(tokenRows(docs), Seq("the", "a", "of", "and"))
     val tr = docs.select(col("doc_id").as("doc"),
       concat(col("source"), lit("#"),
         (col("n_chars") / 100).cast("int").cast("string")).as("block"),

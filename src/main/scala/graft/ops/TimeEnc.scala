@@ -1,5 +1,6 @@
 package graft.ops
 
+import java.sql.Timestamp
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions.unix_micros
 import org.apache.spark.sql.types.TimestampType
@@ -27,4 +28,17 @@ object TimeEnc {
 
   /** Epoch microseconds of `t`, whichever timestamp flavor it carries. */
   def usOf(t: Column): Column = unix_micros(t.cast(TimestampType))
+
+  /** Epoch microseconds of a JVM `Timestamp` — the row-level twin of
+    * the Column form, for state functions that keep time as a Long
+    * (floor division, so pre-epoch instants stay exact). */
+  def usOf(t: Timestamp): Long =
+    math.floorDiv(t.getTime, 1000L) * 1000000L + t.getNanos / 1000L
+
+  /** The `Timestamp` of epoch microseconds `us` — inverse of [[usOf]]. */
+  def tsOf(us: Long): Timestamp = {
+    val t = new Timestamp(math.floorDiv(us, 1000000L) * 1000L)
+    t.setNanos((math.floorMod(us, 1000000L) * 1000L).toInt)
+    t
+  }
 }

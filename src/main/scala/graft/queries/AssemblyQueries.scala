@@ -16,12 +16,6 @@ object AssemblyQueries extends QueryGroup {
   private def docs(s: SparkSession, dir: String): DataFrame =
     Tables(s, dir, "documents")
 
-  private def tokenRows(s: SparkSession, dir: String): DataFrame = {
-    import s.implicits._
-    docs(s, dir).select($"doc_id".as("doc"),
-      explode(TextOps.tokens($"text")).as("token"))
-  }
-
   /** Corpus data card: per (source, lang) slice plus rollup margins —
     * doc/token counts, average length, short-doc fraction, exact-dup
     * fraction. One rollup aggregation; the dup flag is a window count
@@ -80,7 +74,7 @@ object AssemblyQueries extends QueryGroup {
     "q141_hard_negatives",
     (s, dir) => {
       import s.implicits._
-      val tok = tokenRows(s, dir)
+      val tok = TextOps.tokenRows(docs(s, dir))
       val (postings, dfreq, stats) = Retrieval.bm25Index(tok)
       val qterms = tok.filter($"doc" < 10)
         .select($"doc".as("qid"), $"token").distinct()
@@ -169,7 +163,7 @@ object AssemblyQueries extends QueryGroup {
     "q142_token_budget",
     (s, dir) => {
       import s.implicits._
-      val q = tokenRows(s, dir).groupBy($"doc")
+      val q = TextOps.tokenRows(docs(s, dir)).groupBy($"doc")
         .agg(count(lit(1)).cast("long").as("n_tokens"),
           round(sum(length($"token")) * lit(1.0) / count(lit(1)), 6)
             .as("quality"))

@@ -627,9 +627,8 @@ object CorpusQueries extends QueryGroup {
     (s, dir) => {
       import s.implicits._
       val d = docs(s, dir)
-      val tokenRows = d.select($"doc_id".as("doc"),
-        explode(TextOps.tokens($"text")).as("token"))
-      val quality = TextOps.qualityScore(tokenRows, Seq("the", "a", "of", "and"))
+      val quality = TextOps.qualityScore(TextOps.tokenRows(d),
+          Seq("the", "a", "of", "and"))
         .select($"doc", $"n_tokens", $"mean_token_len")
       val ngr = d.withColumn("ts", TextOps.tokens($"text"))
         .select($"doc_id".as("doc"), explode(TextOps.shingles("ts", 2)).as("s"))

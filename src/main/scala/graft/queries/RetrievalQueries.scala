@@ -17,12 +17,6 @@ object RetrievalQueries extends QueryGroup {
   private def docs(s: SparkSession, dir: String): DataFrame =
     Tables(s, dir, "documents")
 
-  private def tokenRows(s: SparkSession, dir: String): DataFrame = {
-    import s.implicits._
-    docs(s, dir).select($"doc_id".as("doc"),
-      explode(TextOps.tokens($"text")).as("token"))
-  }
-
   /** Shared oracle CTEs: token rows and the BM25 index frames (postings
     * with doc length, document frequencies, corpus scalars). */
   private val bm25CtesSql = s"""
@@ -48,7 +42,8 @@ object RetrievalQueries extends QueryGroup {
     "q137_bm25_topk",
     (s, dir) => {
       import s.implicits._
-      val (postings, dfreq, stats) = Retrieval.bm25Index(tokenRows(s, dir))
+      val (postings, dfreq, stats) =
+        Retrieval.bm25Index(TextOps.tokenRows(docs(s, dir)))
       val qterms = Seq(
         0L -> "dup", 0L -> "spark",
         1L -> "scan", 1L -> "filter", 1L -> "fast",
@@ -89,7 +84,7 @@ object RetrievalQueries extends QueryGroup {
     (s, dir) => {
       import s.implicits._
       graft.plans.GraftFunctions.register(s)
-      val tok = tokenRows(s, dir)
+      val tok = TextOps.tokenRows(docs(s, dir))
       // dense: exact cosine top-10 (the ANN family's baseline)
       val all = Similarity.withNorms(
         Tables.spread(s, dir, "embeddings"), $"vec_id", $"embedding")

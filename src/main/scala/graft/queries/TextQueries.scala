@@ -18,13 +18,6 @@ object TextQueries extends QueryGroup {
   private def docs(s: SparkSession, dir: String): DataFrame =
     Tables(s, dir, "documents")
 
-  /** (doc_id, token) rows with multiplicity. */
-  private def tokenRows(s: SparkSession, dir: String): DataFrame = {
-    import s.implicits._
-    docs(s, dir).select($"doc_id".as("doc"),
-      explode(TextOps.tokens($"text")).as("token"))
-  }
-
   private val tokenRowsSql = """
     tok AS (
       SELECT doc_id AS doc, unnest(string_split_regex(trim(text), '\s+')) AS token
@@ -55,7 +48,8 @@ object TextQueries extends QueryGroup {
     "q43_text_quality",
     (s, dir) => {
       import s.implicits._
-      TextOps.qualityScore(tokenRows(s, dir), Seq("the", "a", "of", "and"))
+      TextOps.qualityScore(TextOps.tokenRows(docs(s, dir)),
+          Seq("the", "a", "of", "and"))
         .withColumn("quality",
           $"stop_ratio" * lit(-1.0) + $"mean_token_len" / lit(10.0))
         .orderBy($"doc")
@@ -84,7 +78,7 @@ object TextQueries extends QueryGroup {
         ("le", "fr"), ("la", "fr"), ("et", "fr"),
         ("der", "de"), ("und", "de"), ("die", "de"),
         ("el", "es"), ("los", "es"), ("y", "es"))).toDF("token", "lang_guess")
-      val hits = tokenRows(s, dir)
+      val hits = TextOps.tokenRows(docs(s, dir))
         .join(broadcast(lexicon), Seq("token"))
         .groupBy($"doc", $"lang_guess").agg(count(lit(1)).as("hits"))
       val best = Relational.topOnePerGroup(hits, Seq($"doc"),
@@ -215,7 +209,8 @@ object TextQueries extends QueryGroup {
     "q48_simhash",
     (s, dir) => {
       import s.implicits._
-      val fp = TextOps.simhash(tokenRows(s, dir), $"doc", $"token", bits = 32)
+      val fp = TextOps.simhash(TextOps.tokenRows(docs(s, dir)),
+        $"doc", $"token", bits = 32)
       val blocked = fp.join(
         docs(s, dir).select($"doc_id".as("doc"), $"source"), Seq("doc"))
       blocked.as("a").join(blocked.as("b"),
@@ -389,7 +384,8 @@ object TextQueries extends QueryGroup {
     "q148_blocklist_filter",
     (s, dir) => {
       import s.implicits._
-      TextOps.blocklistStats(tokenRows(s, dir), Seq("dup", "nsfw", "casino"))
+      TextOps.blocklistStats(TextOps.tokenRows(docs(s, dir)),
+          Seq("dup", "nsfw", "casino"))
         .orderBy($"doc")
     },
     Some(s"""
@@ -546,7 +542,7 @@ object TextQueries extends QueryGroup {
     (s, dir) => {
       import s.implicits._
       import org.apache.spark.sql.expressions.Window
-      val top = tokenRows(s, dir).groupBy($"token")
+      val top = TextOps.tokenRows(docs(s, dir)).groupBy($"token")
         .agg(count(lit(1)).as("freq"))
         .orderBy($"freq".desc, $"token".asc).limit(1000)
       val pts = top
@@ -766,7 +762,7 @@ object TextQueries extends QueryGroup {
       import s.implicits._
       import org.apache.spark.sql.expressions.Window
       val B = 10
-      val tr = tokenRows(s, dir)
+      val tr = TextOps.tokenRows(docs(s, dir))
       val grams = docs(s, dir).withColumn("ts", TextOps.tokens($"text"))
         .select($"doc_id".as("doc"), explode(TextOps.shingles("ts", 3)).as("g"))
       val perB = tr.groupBy(expr(s"doc div $B").as("b"))

@@ -2,6 +2,7 @@ package graft.streaming
 
 import java.sql.Timestamp
 
+import graft.ops.TimeEnc.{tsOf, usOf}
 import org.apache.spark.sql.{Dataset, Encoders}
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 
@@ -46,14 +47,6 @@ final case class LastRight(tsUs: Long, value: Double)
   */
 object StreamAsOf {
 
-  private def usOf(t: Timestamp): Long =
-    math.floorDiv(t.getTime, 1000L) * 1000000L + t.getNanos / 1000L
-
-  private def tsOf(us: Long): Timestamp = {
-    val t = new Timestamp(math.floorDiv(us, 1000000L) * 1000L)
-    t.setNanos((math.floorMod(us, 1000000L) * 1000L).toInt)
-    t
-  }
 
   def backward(events: Dataset[AsOfEvent]): Dataset[AsOfOut] = {
     implicit val outEnc = Encoders.product[AsOfOut]

@@ -47,10 +47,8 @@ object StreamHll {
         GroupStateTimeout.NoTimeout())(fn)
   }
 
-  /** Column-level helper: (key, h64(value)) pairs from any DataFrame. */
-  def pairs(df: DataFrame, key: Column, value: Column): Dataset[(String, Long)] = {
-    val spark = df.sparkSession
-    import spark.implicits._
-    df.select(key.cast("string"), graft.ops.TextOps.h64(value)).as[(String, Long)]
-  }
+  /** Column-level helper: (key, h64(value)) pairs from any DataFrame —
+    * the same input [[StreamKmv]] hashes, built by its helper. */
+  def pairs(df: DataFrame, key: Column, value: Column): Dataset[(String, Long)] =
+    StreamKmv.pairs(df, key, value)
 }

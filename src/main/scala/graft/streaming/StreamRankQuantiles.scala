@@ -88,40 +88,15 @@ object StreamRankQuantiles extends Serializable {
   }
 
   /** (key, shard, value) → per-(key, q) estimate stream:
-    * (key, q, t_rank, est, err_bound). */
+    * (key, q, t_rank, est, err_bound) — the unit-weight call of
+    * [[quantilesPerKeyWeighted]] (every arrival carries mass 1). */
   def quantilesPerKey(rows: Dataset[(String, Int, Long)], k: Int,
       maxState: Int, qs: Seq[Double])
-      : Dataset[(String, Double, Long, Long, Long)] = {
-    implicit val stEnc = Encoders.product[RqState]
-    implicit val outEnc = Encoders.tuple(Encoders.STRING,
-      Encoders.scalaDouble, Encoders.scalaLong, Encoders.scalaLong,
-      Encoders.scalaLong)
-
-    def fn(key: String, rows: Iterator[(String, Int, Long)],
-        state: GroupState[RqState])
-        : Iterator[(String, Double, Long, Long, Long)] = {
-      val prev = state.getOption.getOrElse(RqState(Nil, 0L, 0L))
-      val fresh = rows.map(r => RqPoint(r._2, r._3, 1L)).toSeq
-      val n = prev.n + fresh.size
-      var pts = prev.pts ++ fresh
-      var slack = prev.slack
-      if (pts.size > maxState) {
-        val (c, s) = compress(pts, k); pts = c; slack += s
-      }
-      state.update(RqState(pts, n, slack))
-      // estimate off a compressed COPY: the buffer keeps its raw
-      // precision for future batches; the emitted rows pay exactly the
-      // batch sketch's resolution (and so match it bit for bit while
-      // no mid-stream compression has fired)
-      val (cpts, emitSlack) = compress(pts, k)
-      estimates(cpts, n, qs).iterator
-        .map { case (q, t, est) => (key, q, t, est, slack + emitSlack) }
-    }
-
-    rows.groupByKey(_._1)(Encoders.STRING)
-      .flatMapGroupsWithState[RqState, (String, Double, Long, Long, Long)](
-        OutputMode.Update(), GroupStateTimeout.NoTimeout())(fn)
-  }
+      : Dataset[(String, Double, Long, Long, Long)] =
+    quantilesPerKeyWeighted(
+      rows.map(r => (r._1, r._2, r._3, 1L))(Encoders.tuple(Encoders.STRING,
+        Encoders.scalaInt, Encoders.scalaLong, Encoders.scalaLong)),
+      k, maxState, qs)
 
   /** WEIGHTED arrivals: (key, shard, value, weight) → per-(key, q)
     * estimates — the streaming twin of
@@ -129,10 +104,10 @@ object StreamRankQuantiles extends Serializable {
     * the batch half; this closes the loop so batch and stream are one
     * logical operator in BOTH weight modes). Arrivals append with
     * their own mass, `n` accumulates total mass EXACTLY, and the
-    * compression/estimation machinery is byte-identical to the unit
-    * path (it was always weighted internally — unit arrivals were the
-    * special case). While the buffer has never force-compressed, the
-    * emitted (t_rank, est) are bit-identical to the batch
+    * compression/estimation machinery was always weighted internally,
+    * so [[quantilesPerKey]] is this operator over unit arrivals.
+    * While the buffer has never force-compressed, the emitted
+    * (t_rank, est) are bit-identical to the batch
     * rankSketchWeighted → rankQuantiles of the prefix with ONE
     * stated divergence: a shard holding ≤ k distinct points emits
     * exact estimates (the copy-compression keeps everything), where
@@ -160,6 +135,10 @@ object StreamRankQuantiles extends Serializable {
         val (c, s) = compress(pts, k); pts = c; slack += s
       }
       state.update(RqState(pts, n, slack))
+      // estimate off a compressed COPY: the buffer keeps its raw
+      // precision for future batches; the emitted rows pay exactly the
+      // batch sketch's resolution (and so match it bit for bit while
+      // no mid-stream compression has fired)
       val (cpts, emitSlack) = compress(pts, k)
       estimates(cpts, n, qs).iterator
         .map { case (q, t, est) => (key, q, t, est, slack + emitSlack) }

@@ -3,6 +3,7 @@ package graft.streaming
 import java.math.{BigDecimal => JBigDecimal, RoundingMode}
 import java.sql.Timestamp
 
+import graft.ops.TimeEnc.{tsOf, usOf}
 import org.apache.spark.sql.{Dataset, Encoders}
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 
@@ -42,14 +43,6 @@ final case class OpenSession(
   */
 object StreamSessionize {
 
-  private def usOf(t: Timestamp): Long =
-    math.floorDiv(t.getTime, 1000L) * 1000000L + t.getNanos / 1000L
-
-  private def tsOf(us: Long): Timestamp = {
-    val t = new Timestamp(math.floorDiv(us, 1000000L) * 1000L)
-    t.setNanos((math.floorMod(us, 1000000L) * 1000L).toInt)
-    t
-  }
 
   /** Largest magnitude representable by DECIMAL(18,6). */
   private val maxAbs6 = new JBigDecimal("999999999999.999999")

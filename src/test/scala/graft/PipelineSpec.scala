@@ -50,6 +50,35 @@ class PipelineSpec extends SparkSpec {
     assert(out("siconc") == ((null, "unmatched")))
   }
 
+  test("catalog resolve: the ladder on Pt-modified rungs (FIXTURES.md varlist shape)") {
+    // aus2200-style rows: tas at 1hr, 1hrPt and 10minPt from one
+    // model; hfss_Pt only at the 1hrPt point rung
+    def aus(cmor: String, fld: String, freq: String, table: String) =
+      Mapping(cmor, fld, "", "K", "time_0 lat lon", freq, "atmos",
+        "area: time: mean", "", table, "AUS2200")
+    val mdf = Catalog.mappings(spark, Seq(
+      aus("tas", "fld_s03i236", "1hr", "AUS2200_A1hr"),
+      aus("tas", "fld_s03i236", "1hrPt", "AUS2200_A1hrPt"),
+      aus("tas", "fld_s03i236", "10minPt", "AUS2200_A10min"),
+      aus("hfss_Pt", "fld_s03i217", "1hrPt", "AUS2200_A1hrPt")))
+    val req = Seq(("tas", "1hr"), ("tas", "day"), ("hfss_Pt", "1hr"),
+        ("hfss_Pt", "10min"))
+      .toDF("cmorVar", "frequency")
+    val out = Catalog.resolve(req, mdf)
+      .select($"req_var", $"req_freq", $"frequency", $"resample", $"status")
+      .as[(String, String, String, String, String)].collect()
+      .map(r => (r._1, r._2) -> (r._3, r._4, r._5)).toMap
+    assert(out.size == 4, out)
+    // 1hr and 1hrPt share a rung; the exact string wins the tie
+    assert(out(("tas", "1hr")) == (("1hr", "", "exact")))
+    // a 1hrPt-only variable at 1hr is a resample, never an exact hit
+    assert(out(("hfss_Pt", "1hr")) == (("1hrPt", "1hr", "resampled")))
+    // day takes the NEAREST finer source: 1hr, not 10minPt
+    assert(out(("tas", "day")) == (("1hr", "day", "resampled")))
+    // 10min is finer than every hfss_Pt source: unmatched, not coarser
+    assert(out(("hfss_Pt", "10min")) == ((null, null, "unmatched")))
+  }
+
   test("catalog derivable: all-inputs-present relational division") {
     val mdf = Catalog.mappings(spark, maps)
     val avail = Seq("fld_s03i236", "rain").toDF("varName")
@@ -306,6 +335,29 @@ class PipelineSpec extends SparkSpec {
     // filename stamp precision follows frequency
     val fn = Sink.fileName(task.key, "mon", "19960102030405", "19971112131415")
     assert(fn == "tas_Amon_SPARK1_histor_r1i1p1f1_gn_199601-199711.parquet")
+  }
+
+  test("pipeline with a file: URI root writes data and sidecar through one filesystem") {
+    val t0 = java.time.Instant.parse("2024-01-01T00:00:00Z").toEpochMilli * 1000L
+    val raw = spark.range(24).select(
+      timestamp_micros(lit(t0) + $"id" * 3600000000L).as("time"),
+      ($"id" * 1.5).as("fld"))
+    val root = Files.createTempDirectory("graft-uri").toUri.toString
+      .stripSuffix("/")
+    assert(root.startsWith("file:"), root)
+    val task = Pipeline.Task("tas_E1hr_uri", Seq("fld"), "", "", "mean",
+      t0, t0 + 24L * 3600000000L,
+      Sink.DrsKey("CMIP6", "ACME", "SPARK1", "histor", "r1i1p1f1",
+        "E1hr", "tas", "gn", "v1"), Map("units" -> "K"))
+    val res = Pipeline.run(spark, raw, task, root)
+    assert(res.isRight, res)
+    val outDir = res.toOption.get
+    assert(spark.read.parquet(outDir).count() == 24)
+    val sidecar = Files.readString(
+      java.nio.file.Paths.get(new java.net.URI(s"$outDir/_attrs.json")))
+    assert(sidecar.contains(""""units": "K""""), sidecar)
+    assert(spark.read.parquet(s"$root/_status")
+      .filter($"status" === "processed").count() == 1)
   }
 
   test("pipeline slices of one variable land side by side; a re-run replaces only its own") {
