@@ -39,11 +39,12 @@ object Dev {
       else Some(spark.sparkContext.getPersistentRDDs.keySet.toSet)
     } catch { case scala.util.control.NonFatal(_) => None }
 
-  /** Release every persisted RDD a query run created (checkpoint
-    * barriers, iterative slots' final rounds). Queries are
-    * self-contained — no run ever reads another run's blocks — but a
-    * bare localCheckpoint outlives its query, and across 220 queries ×
-    * 4–6 passes the accumulated blocks are executor-storage pressure,
+  /** Release every persisted RDD a query run created: the checkpoints
+    * its result reads (which `Iterate.scope` keeps for the caller),
+    * query-level cuts outside any scope, and bare one-shot
+    * `localCheckpoint()` barriers. Queries are self-contained — no run
+    * ever reads another run's blocks — and across 220 queries × 4–6
+    * passes the accumulated blocks are executor-storage pressure,
     * eviction churn, and GC work (the r9 verdict's bimodal-tier-pass
     * suspect).
     *

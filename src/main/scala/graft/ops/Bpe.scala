@@ -105,9 +105,8 @@ object Bpe {
     * logical plan doubling per merge). Output-identical to
     * [[trainLocal]]; used when the vocab exceeds the pull-local bound. */
   private[graft] def trainDistributed(vocab: DataFrame,
-      k: Int): (Seq[(String, String)], DataFrame) = {
-    val roll = new Iterate.RollingCheckpoint
-    var syms = roll.next(vocab.select(col("word"), col("cnt"),
+      k: Int): (Seq[(String, String)], DataFrame) = Iterate.scope {
+    var syms = Iterate.cut(vocab.select(col("word"), col("cnt"),
       charSymbols(col("word")).as("symbols")))
     val merges = Seq.newBuilder[(String, String)]
     var done = false
@@ -120,7 +119,7 @@ object Bpe {
       else {
         val (l, r) = (top(0).getString(0), top(0).getString(1))
         merges += ((l, r))
-        syms = roll.next(syms.withColumn("symbols",
+        syms = Iterate.advance(syms, syms.withColumn("symbols",
           applyMerge(col("symbols"), l, r)))
       }
       i += 1

@@ -82,13 +82,13 @@ object CorpusPipelineV2 {
     * [[audits]]. Output: (doc_id, source, clean_text, n_chars, split)
     * — one row per KEPT document. */
   def keptWithSplit(docs: DataFrame, checkpoint: Boolean): DataFrame =
-    stages(docs, checkpoint).kept
+    Iterate.scope(stages(docs, checkpoint).kept)
 
   /** Stages 1–7 with every stage boundary exposed (see [[V2Stages]]).
     * Only `sampled` and `cleaned` are barrier points ([[cp]]); counting
     * the others re-derives at most one stage from its nearest
     * barrier. */
-  def stages(docs: DataFrame, checkpoint: Boolean): V2Stages = {
+  def stages(docs: DataFrame, checkpoint: Boolean): V2Stages = Iterate.scope {
     // stage 0/1 — normalized exact dedup (q149): the cheap collapse
     // runs FIRST so every later stage (quality gates, token joins,
     // minhash) pays for one copy of each formatting-variant group
@@ -174,7 +174,7 @@ object CorpusPipelineV2 {
     * windows — the corpus-sized frame never sorts in one partition),
     * partitioned by split so each split carries 8 balanced shards. */
   def build(docs: DataFrame, checkpoint: Boolean = true): DataFrame =
-    buildFromKept(cp(keptWithSplit(docs, checkpoint), checkpoint))
+    Iterate.scope(buildFromKept(cp(keptWithSplit(docs, checkpoint), checkpoint)))
 
   /** Stages 8–9 over an already-materialized [[keptWithSplit]] frame —
     * callers that also run [[auditsFromKept]] (the gated compositions,
@@ -228,7 +228,7 @@ object CorpusPipelineV2 {
     * Output: (check, key, value, pass), a (cells + sources)-sized
     * frame. */
   def audits(docs: DataFrame, checkpoint: Boolean = true): DataFrame =
-    auditsFromKept(docs, cp(keptWithSplit(docs, checkpoint), checkpoint))
+    Iterate.scope(auditsFromKept(docs, cp(keptWithSplit(docs, checkpoint), checkpoint)))
 
   /** The audit gates over an already-materialized kept frame (see
     * [[buildFromKept]] for the share-the-DAG contract). `docs` is read
@@ -322,7 +322,7 @@ object CorpusPipelineV2 {
     * (check='rank_gate', key=source, value=pagerank, pass=kept whole)).
     * The median is exact nearest-rank over the HOSTS-sized rank table
     * (a single-partition window is fine at that size, never on data). */
-  def rankGate(docs: DataFrame): (DataFrame, DataFrame) = {
+  def rankGate(docs: DataFrame): (DataFrame, DataFrame) = Iterate.scope {
     val pr = sourceAuthority(docs).transform(Iterate.cut)
     val med = WindowOps.exactMedian(pr, Seq(lit(1)), col("pagerank"),
       col("node")).select(col("median"))
@@ -388,7 +388,7 @@ object CorpusPipelineV2 {
     * only acts on CONFIRMED low-tier membership. Returns (gated docs,
     * per-source audit rows (check='tier_gate', key=source,
     * value = 1.0 hi / 0.0 lo / −1.0 unlabeled, pass = not halved)). */
-  def tierGate(docs: DataFrame, tiers: DataFrame): (DataFrame, DataFrame) = {
+  def tierGate(docs: DataFrame, tiers: DataFrame): (DataFrame, DataFrame) = Iterate.scope {
     val t = tiers.transform(Iterate.cut)
     val gated = docs
       .join(broadcast(t), Seq("source"), "left")
@@ -444,7 +444,7 @@ object CorpusPipelineV2 {
     * The PSI reference stays the RAW corpus (the v3 convention: the
     * drift gate must see what the gates did to the tail). Returns
     * (chunk frame, audit frame). */
-  def buildAndAuditTierGated(docs: DataFrame): (DataFrame, DataFrame) = {
+  def buildAndAuditTierGated(docs: DataFrame): (DataFrame, DataFrame) = Iterate.scope {
     val edges = sourceAffinityEdges(docs).transform(Iterate.cut)
     val pr = Graph.pageRank(edges, iters = 3).transform(Iterate.cut)
     val med = WindowOps.exactMedian(pr, Seq(lit(1)), col("pagerank"),
@@ -497,7 +497,7 @@ object CorpusPipelineV2 {
     * stage5's row is pure arithmetic on two counts: the cluster step
     * labels every stage-4 doc and stage 6 keeps exactly one per
     * cluster, so dropped duplicates = n_docs − n_keepers. */
-  def summary(docs: DataFrame, checkpoint: Boolean = true): DataFrame = {
+  def summary(docs: DataFrame, checkpoint: Boolean = true): DataFrame = Iterate.scope {
     val st = stages(docs, checkpoint)
     val kept = cp(st.kept, checkpoint)
     def one(check: String, key: String, df: DataFrame): DataFrame =

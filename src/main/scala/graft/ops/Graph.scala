@@ -22,9 +22,10 @@ import org.apache.spark.sql.functions._
   *     groupBy on `dst` with a partially-aggregated sum, so celebrity
   *     sinks (the skew case) combine map-side before the exchange.
   *   - The loop runs over ITERATIONS, never the data: lineage is cut
-  *     with `localCheckpoint(true)` each round (the q185/q174 lesson —
+  *     with [[Iterate.advance]] each round (the q185/q174 lesson —
   *     an iterative plan that re-derives round k-1 from scratch turns
-  *     O(k) work into O(k²)).
+  *     O(k) work into O(k²)) inside an [[Iterate.scope]], so only the
+  *     checkpoints an operator's result reads outlive the call.
   *
   * Cross-engine exactness (the DuckDB oracle walks the identical
   * arithmetic): every per-edge contribution `rank/outdeg` is rounded
@@ -73,7 +74,7 @@ object Graph {
     * them by 1e-6. Same symmetric-frame contract, one join and one
     * aggregate per round, decimal-exact summation. Returns
     * (node, pagerank). */
-  def pageRankWeighted(edges: DataFrame, iters: Int): DataFrame = {
+  def pageRankWeighted(edges: DataFrame, iters: Int): DataFrame = Iterate.scope {
     val spark = edges.sparkSession
     import spark.implicits._
     // materialize the edge frame ONCE — deg and eW both read it, and a
@@ -98,11 +99,7 @@ object Graph {
       .select(round(lit(1.0) / $"n", 6).as("r0"),
         round(lit(0.15) / $"n", 6).as("base")).head()
     val (r0, base) = (c0.getDouble(0), c0.getDouble(1))
-    // the rank vector rolls through one slot: round k's checkpoint
-    // releases round k−1's blocks (Iterate doc — a bare localCheckpoint
-    // per round leaks every superseded round for the session)
-    val roll = new Iterate.RollingCheckpoint
-    var ranks = roll.next(deg.select($"src".as("node"), lit(r0).as("r")))
+    var ranks = Iterate.cut(deg.select($"src".as("node"), lit(r0).as("r")))
     val eW = Iterate.cut(
       e.join(deg, Seq("src")).select($"src", $"dst", $"w", $"wout"))
     for (_ <- 1 to iters) {
@@ -112,7 +109,7 @@ object Graph {
           (round($"r" / $"wout", 6).cast("decimal(18,6)") * $"w").as("c"))
       val sums = contrib.groupBy($"dst")
         .agg(sum($"c").as("sm"))
-      ranks = roll.next(sums.select($"dst".as("node"),
+      ranks = Iterate.advance(ranks, sums.select($"dst".as("node"),
         round(lit(base).cast("decimal(18,6)") +
           expr("CAST(0.85 AS DECIMAL(3,2))") * $"sm", 6)
           .cast("double").as("r")))
@@ -197,7 +194,7 @@ object Graph {
     * 6-decimal ranks exactly; D/n rounds to 6 decimals (one IEEE
     * division); the damping blend runs in decimal. Returns
     * (node, pagerank). */
-  def pageRankDirected(edges: DataFrame, iters: Int): DataFrame = {
+  def pageRankDirected(edges: DataFrame, iters: Int): DataFrame = Iterate.scope {
     val spark = edges.sparkSession
     import spark.implicits._
     val e = edges.transform(Iterate.cut)
@@ -238,15 +235,14 @@ object Graph {
           .select($"node".as("src"), lit(dkey).as("dst"),
             lit(null).cast("long").as("outdeg"))))
     val zero = expr("CAST(0 AS DECIMAL(18,6))")
-    val roll = new Iterate.RollingCheckpoint
-    val smRoll = new Iterate.RollingCheckpoint
-    var ranks = roll.next(nodesP.select($"node", lit(r0).as("r")))
+    var ranks = Iterate.cut(nodesP.select($"node", lit(r0).as("r")))
+    var sums: DataFrame = null
     for (_ <- 1 to iters) {
       // ONE data-sized join + ONE map-side-combined aggregate per
       // round; checkpointed so the dangling extraction and the rank
       // update both read the materialized node-sized result instead
       // of re-deriving the join (the r10 per-round barrier).
-      val sums = smRoll.next(routed
+      sums = Iterate.advance(sums, routed
         .join(ranks.withColumnRenamed("node", "src"), Seq("src"))
         .select($"dst",
           when($"outdeg".isNull, $"r")
@@ -260,7 +256,7 @@ object Graph {
         .agg(coalesce(sum($"sm"), zero).as("dmass"))
         .select(round($"dmass".cast("double") / lit(nN), 6)
           .cast("decimal(18,6)").as("dshare"))
-      ranks = roll.next(nodesP.join(sums, Seq("node"), "left")
+      ranks = Iterate.advance(ranks, nodesP.join(sums, Seq("node"), "left")
         .crossJoin(broadcast(drow))
         .select($"node",
           round(lit(base).cast("decimal(18,6)") +
@@ -268,9 +264,6 @@ object Graph {
               (coalesce($"sm", zero) + $"dshare"), 6)
             .cast("double").as("r")))
     }
-    // the final ranks are eagerly checkpointed; the last sums round
-    // has no remaining reader
-    smRoll.close()
     ranks.select($"node", $"r".as("pagerank"))
   }
 
@@ -288,8 +281,8 @@ object Graph {
     * node-sized score vector into the data-sized edges plus one
     * map-side-combined sum, and the normalizer is a 1-row aggregate
     * broadcast back — the identical per-round shape as [[pageRank]],
-    * run twice. Rolling checkpoints per half-step (Iterate
-    * discipline).
+    * run twice. One live checkpoint per half-step
+    * ([[Iterate.advance]]).
     *
     * Cross-engine exactness: scores are 6-decimal doubles; per-edge
     * terms cast to DECIMAL(18,6) and sum exactly; the normalizer
@@ -297,7 +290,7 @@ object Graph {
     * back to 6 decimals — the [[pageRankDirected]] dangling-share
     * convention. Nodes with no in-edges carry authority 0 (no out:
     * hub 0). Returns (node, authority, hub) over src ∪ dst. */
-  def hits(edges: DataFrame, iters: Int): DataFrame = {
+  def hits(edges: DataFrame, iters: Int): DataFrame = Iterate.scope {
     require(iters >= 1, s"hits needs iters >= 1, got $iters")
     val spark = edges.sparkSession
     import spark.implicits._
@@ -306,9 +299,7 @@ object Graph {
       e.select($"src".as("node"))
         .unionByName(e.select($"dst".as("node"))).distinct())
     val zero = expr("CAST(0 AS DECIMAL(18,6))")
-    val aRoll = new Iterate.RollingCheckpoint
-    val hRoll = new Iterate.RollingCheckpoint
-    var h = hRoll.next(nodes.select($"node", lit(1.0).as("h")))
+    var h = Iterate.cut(nodes.select($"node", lit(1.0).as("h")))
     var a: DataFrame = null
     for (_ <- 1 to iters) {
       val araw = e.join(h.withColumnRenamed("node", "src"), Seq("src"))
@@ -317,7 +308,7 @@ object Graph {
       val aFull = nodes.join(araw, Seq("node"), "left")
         .select($"node", coalesce($"ar", zero).as("ar"))
       val sa = aFull.agg(sum($"ar").as("s"))
-      a = aRoll.next(aFull.crossJoin(broadcast(sa))
+      a = Iterate.advance(a, aFull.crossJoin(broadcast(sa))
         .select($"node",
           round($"ar".cast("double") / $"s".cast("double"), 6).as("a")))
       val hraw = e.join(a.withColumnRenamed("node", "dst"), Seq("dst"))
@@ -326,7 +317,7 @@ object Graph {
       val hFull = nodes.join(hraw, Seq("node"), "left")
         .select($"node", coalesce($"hr", zero).as("hr"))
       val sh = hFull.agg(sum($"hr").as("s"))
-      h = hRoll.next(hFull.crossJoin(broadcast(sh))
+      h = Iterate.advance(h, hFull.crossJoin(broadcast(sh))
         .select($"node",
           round($"hr".cast("double") / $"s".cast("double"), 6).as("h")))
     }
@@ -352,7 +343,7 @@ object Graph {
     * not the hub square. All counts are exact integers; the
     * coefficient 2T/(d(d−1)) is one division rounded to 6 decimals.
     * Output: (node, degree, n_tri, clustering). */
-  def triangleStats(pairs: DataFrame): DataFrame = {
+  def triangleStats(pairs: DataFrame): DataFrame = Iterate.scope {
     val spark = pairs.sparkSession
     import spark.implicits._
     val p = pairs.transform(Iterate.cut)
@@ -483,7 +474,7 @@ object Graph {
     * Per round: ONE equi-join of the node-sized label vector into the
     * data-sized symmetric edges, one map-side-combined (node, label)
     * count, one per-node aggregate argmin, and the seed clamp as a
-    * node-keyed left join. Rolling checkpoint per round. The w ≡ 1
+    * node-keyed left join. One live checkpoint per round. The w ≡ 1
     * call of [[labelPropagateWeighted]]. `edges(src, dst)` symmetric
     * distinct; `seeds(node, label)`. Returns (node, label), label
     * null where diffusion never arrived. */
@@ -503,7 +494,7 @@ object Graph {
     * edges⋈labels join, one map-side-combined (node, label) weight
     * sum, one aggregate argmin, the seed-clamp left join. */
   def labelPropagateWeighted(edges: DataFrame, seeds: DataFrame,
-      rounds: Int): DataFrame = {
+      rounds: Int): DataFrame = Iterate.scope {
     val spark = edges.sparkSession
     import spark.implicits._
     // the static nodes⋉seeds left join is hoisted OUT of the loop (it
@@ -515,8 +506,7 @@ object Graph {
       e.select($"src".as("node")).distinct()
         .join(seeds.select($"node", $"label".as("__seed")),
           Seq("node"), "left"))
-    val roll = new Iterate.RollingCheckpoint
-    var lab = roll.next(nsd.select($"node", $"__seed".as("label")))
+    var lab = Iterate.cut(nsd.select($"node", $"__seed".as("label")))
     for (_ <- 1 to rounds) {
       val mass = e
         .join(lab.select($"node".as("src"), $"label"), Seq("src"))
@@ -529,7 +519,7 @@ object Graph {
       val best = Relational.argMinPerGroup(mass, Seq($"node"),
         struct((-$"__m").as("o1"), $"label".as("o2")))
         .select($"node", $"label".as("__best"))
-      lab = roll.next(nsd
+      lab = Iterate.advance(lab, nsd
         .join(best, Seq("node"), "left")
         .select($"node", coalesce($"__seed", $"__best").as("label")))
     }
@@ -638,7 +628,7 @@ object Graph {
     * k-hop neighborhood through the shuffle. `seeds(node)` must be a
     * subset of the edge srcs. Returns (node, ppr). */
   def pageRankPersonalized(edges: DataFrame, seeds: DataFrame,
-      iters: Int): DataFrame = {
+      iters: Int): DataFrame = Iterate.scope {
     val spark = edges.sparkSession
     import spark.implicits._
     val e = Iterate.cut(edges)
@@ -649,11 +639,10 @@ object Graph {
         round(lit(0.15) / $"ns", 6).as("base"))
     val seedBase = Iterate.cut(seeds.crossJoin(broadcast(srow)))
     // round 0's ranks are a plain projection of seedBase (no checkpoint
-    // of their own); the rolling slot only ever releases checkpoints it
-    // created, so seedBase — reused by every round's teleport join —
-    // is never at risk
+    // of their own): advance releases only a bare checkpoint, so
+    // seedBase — reused by every round's teleport join — is never at
+    // risk
     var ranks = seedBase.select($"node", $"r0".as("r"))
-    val roll = new Iterate.RollingCheckpoint
     val eWithDeg = Iterate.cut(
       e.join(deg, Seq("src")).select($"src", $"dst", $"outdeg"))
     val zero = expr("CAST(0 AS DECIMAL(18,6))")
@@ -663,7 +652,7 @@ object Graph {
         .select($"dst", round($"r" / $"outdeg", 6).as("c"))
       val sums = contrib.groupBy($"dst".as("node"))
         .agg(sum($"c".cast("decimal(18,6)")).as("sm"))
-      ranks = roll.next(sums
+      ranks = Iterate.advance(ranks, sums
         .join(seedBase.select($"node", $"base"), Seq("node"), "full_outer")
         .select($"node",
           round(coalesce($"base", lit(0.0)).cast("decimal(18,6)") +
@@ -720,29 +709,26 @@ object Graph {
     * LLM-pipeline reading: the k-core of a near-dup graph is its
     * boilerplate backbone (template cliques survive, incidental pairs
     * peel away). */
-  def kCorePeel(edges: DataFrame, k: Int, rounds: Int): DataFrame = {
+  def kCorePeel(edges: DataFrame, k: Int, rounds: Int): DataFrame = Iterate.scope {
     val spark = edges.sparkSession
     import spark.implicits._
-    // two rolling slots: the edge frame, and the accumulated shrink
-    // curve. The curve must roll too — its round-r row reads round-r's
-    // edge frame, so it has to MATERIALIZE before round r+1's edge
-    // checkpoint releases those blocks (a lazy Seq of per-round aggs,
-    // the old shape, would read released checkpoints at collect time).
-    val eRoll = new Iterate.RollingCheckpoint
-    val sRoll = new Iterate.RollingCheckpoint
-    var e = eRoll.next(edges)
+    // the accumulated shrink curve is cut every round too: its round-r
+    // row reads round-r's edge frame, so it has to MATERIALIZE before
+    // round r+1's edge checkpoint releases those blocks (a lazy Seq of
+    // per-round aggs would read released checkpoints at collect time)
+    var e = Iterate.cut(edges)
     var stats: DataFrame = null
     for (r <- 1 to rounds) {
       val keep = e.groupBy($"src").agg(count(lit(1)).as("__d"))
         .filter($"__d" >= k).select($"src".as("node"))
-      e = eRoll.next(e.join(keep.select($"node".as("src")), Seq("src"), "left_semi")
+      e = Iterate.advance(e, e.join(keep.select($"node".as("src")), Seq("src"), "left_semi")
         .join(keep.select($"node".as("dst")), Seq("dst"), "left_semi")
         .select($"src", $"dst"))
       val row = e.agg(
         countDistinct($"src").as("n_nodes"),
         count(lit(1)).as("n_edges"))
         .select(lit(r.toLong).as("round"), $"n_nodes", $"n_edges")
-      stats = sRoll.next(if (stats == null) row else stats.unionByName(row))
+      stats = Iterate.advance(stats, if (stats == null) row else stats.unionByName(row))
     }
     stats.orderBy($"round")
   }
@@ -761,17 +747,15 @@ object Graph {
     * degree-ordered orientation (wedge volume bounded by arboricity,
     * never a hub's C(d,2)), each triangle exploding into its three
     * id-normalized edges for one map-side-combined count; the edge
-    * frame and the census curve roll through [[Iterate]] slots (the
+    * frame and the census curve each keep one live round (the
     * kCorePeel pattern). An edge in no triangle has no support row,
     * so the k ≥ 3 inner join drops it — exactly the truss rule.
     * All-integer. Output: (round, n_nodes, n_edges), 1..rounds. */
-  def kTrussPeel(pairs: DataFrame, k: Int, rounds: Int): DataFrame = {
+  def kTrussPeel(pairs: DataFrame, k: Int, rounds: Int): DataFrame = Iterate.scope {
     require(k >= 3, s"kTrussPeel needs k >= 3, got $k")
     val spark = pairs.sparkSession
     import spark.implicits._
-    val eRoll = new Iterate.RollingCheckpoint
-    val sRoll = new Iterate.RollingCheckpoint
-    var p = eRoll.next(pairs.select($"d1", $"d2"))
+    var p = Iterate.cut(pairs.select($"d1", $"d2"))
     var stats: DataFrame = null
     for (r <- 1 to rounds) {
       val deg = p.select($"d1".as("node"))
@@ -810,14 +794,14 @@ object Graph {
           .as("e"))
         .groupBy($"e.a".as("d1"), $"e.b".as("d2"))
         .agg(count(lit(1)).as("__sup"))
-      p = eRoll.next(p.join(
+      p = Iterate.advance(p, p.join(
           support.filter($"__sup" >= k - 2).select($"d1", $"d2"),
           Seq("d1", "d2"), "left_semi"))
       val row = p.select(explode(array($"d1", $"d2")).as("n"))
         .agg(countDistinct($"n").as("n_nodes"))
         .crossJoin(p.agg(count(lit(1)).as("n_edges")))
         .select(lit(r.toLong).as("round"), $"n_nodes", $"n_edges")
-      stats = sRoll.next(if (stats == null) row else stats.unionByName(row))
+      stats = Iterate.advance(stats, if (stats == null) row else stats.unionByName(row))
     }
     stats.orderBy($"round")
   }
@@ -887,27 +871,26 @@ object Graph {
     *
     * Per round: one degree count, ONE 1-row min broadcast, two
     * semi-joins to drop the peeled nodes — the [[kCorePeel]] shape
-    * with a data-derived threshold. Edge frame and census roll
-    * through [[Iterate]] slots. All-integer. `edges(src, dst)`
+    * with a data-derived threshold. Edge frame and census keep one
+    * live round each. All-integer. `edges(src, dst)`
     * symmetric distinct. Output: (round, peel_deg, n_peeled,
     * n_nodes_left, n_edges_left), rounds 1..R (rows stop early when
     * the graph empties — n_peeled 0 on exhausted rounds). */
-  def onionPeel(edges: DataFrame, rounds: Int): DataFrame = {
+  def onionPeel(edges: DataFrame, rounds: Int): DataFrame = Iterate.scope {
     val spark = edges.sparkSession
     import spark.implicits._
-    val eRoll = new Iterate.RollingCheckpoint
-    val sRoll = new Iterate.RollingCheckpoint
-    var e = eRoll.next(edges.select($"src", $"dst"))
+    var e = Iterate.cut(edges.select($"src", $"dst"))
     var stats: DataFrame = null
+    var deg: DataFrame = null
     for (r <- 1 to rounds) {
-      // within-round temporary, but Iterate.cut keeps the loop
-      // discipline structural (IterateDisciplineSpec)
-      val deg = Iterate.cut(
+      // the census row reads deg, so it rolls like e and stats: round
+      // r's deg is released only once round r+1's has materialized
+      deg = Iterate.advance(deg,
         e.groupBy($"src".as("node")).agg(count(lit(1)).as("deg")))
       val mrow = deg.agg(min($"deg").as("mdeg"))
       val keep = deg.crossJoin(broadcast(mrow))
         .filter($"deg" > $"mdeg").select($"node")
-      val e2 = eRoll.next(e
+      val e2 = Iterate.advance(e, e
         .join(keep.select($"node".as("src")), Seq("src"), "left_semi")
         .join(keep.select($"node".as("dst")), Seq("dst"), "left_semi")
         .select($"src", $"dst"))
@@ -922,10 +905,7 @@ object Graph {
           coalesce($"n_peeled", lit(0L)).as("n_peeled"),
           $"n_nodes_left", $"n_edges_left")
       e = e2
-      // the census row reads deg — release only after sRoll.next has
-      // eagerly materialized it (the Iterate release-after-read rule)
-      stats = sRoll.next(if (stats == null) row else stats.unionByName(row))
-      Iterate.release(deg)
+      stats = Iterate.advance(stats, if (stats == null) row else stats.unionByName(row))
     }
     stats.orderBy($"round")
   }
@@ -971,34 +951,31 @@ object Graph {
     *
     * Per hop: one semi-join of the data-sized edges against the
     * node-sized frontier, a distinct, and an anti-join against
-    * visited; frontier, visited, and the stats curve each roll
-    * through their own checkpoint slot (the [[kCorePeel]] pattern —
-    * the curve must materialize before its inputs' blocks release).
+    * visited; frontier, visited, and the stats curve each keep one
+    * live round (the [[kCorePeel]] pattern — the curve must
+    * materialize before its inputs' blocks release).
     * `edges(src, dst)` directed or symmetric; `seeds(node)`. Output:
     * (hop, n_frontier, n_visited) with hop 0 = the seed set. */
   def bfsFrontier(edges: DataFrame, seeds: DataFrame,
-      hops: Int): DataFrame = {
+      hops: Int): DataFrame = Iterate.scope {
     val spark = edges.sparkSession
     import spark.implicits._
     val e = Iterate.cut(edges)
-    val fRoll = new Iterate.RollingCheckpoint
-    val vRoll = new Iterate.RollingCheckpoint
-    val sRoll = new Iterate.RollingCheckpoint
-    var frontier = fRoll.next(seeds.select($"node").distinct())
-    var visited = vRoll.next(frontier.select($"node"))
-    var stats = sRoll.next(frontier.agg(count(lit(1)).as("n_frontier"))
+    var frontier = Iterate.cut(seeds.select($"node").distinct())
+    var visited = Iterate.cut(frontier.select($"node"))
+    var stats = Iterate.cut(frontier.agg(count(lit(1)).as("n_frontier"))
       .select(lit(0L).as("hop"), $"n_frontier",
         $"n_frontier".as("n_visited")))
     for (h <- 1 to hops) {
-      frontier = fRoll.next(e
+      frontier = Iterate.advance(frontier, e
         .join(frontier.select($"node".as("src")), Seq("src"), "left_semi")
         .select($"dst".as("node")).distinct()
         .join(visited, Seq("node"), "left_anti"))
-      visited = vRoll.next(visited.unionByName(frontier))
+      visited = Iterate.advance(visited, visited.unionByName(frontier))
       val row = frontier.agg(count(lit(1)).as("n_frontier"))
         .crossJoin(visited.agg(count(lit(1)).as("n_visited")))
         .select(lit(h.toLong).as("hop"), $"n_frontier", $"n_visited")
-      stats = sRoll.next(stats.unionByName(row))
+      stats = Iterate.advance(stats, stats.unionByName(row))
     }
     stats.orderBy($"hop")
   }
@@ -1087,20 +1064,19 @@ object Graph {
     *
     * `edges(src, dst, w)` with w a positive integral column;
     * `seeds(node)` at distance 0. Output: (node, dist) for reached
-    * nodes only. Rolls through one checkpoint slot per round
-    * ([[kCorePeel]] discipline). */
-  def sssp(edges: DataFrame, seeds: DataFrame, rounds: Int): DataFrame = {
+    * nodes only. One live checkpoint per round ([[kCorePeel]]
+    * discipline). */
+  def sssp(edges: DataFrame, seeds: DataFrame, rounds: Int): DataFrame = Iterate.scope {
     val spark = edges.sparkSession
     import spark.implicits._
     val e = Iterate.cut(edges)
-    val roll = new Iterate.RollingCheckpoint
-    var dist = roll.next(seeds.select($"node").distinct()
+    var dist = Iterate.cut(seeds.select($"node").distinct()
       .select($"node", lit(0L).as("dist")))
     for (_ <- 1 to rounds) {
       val relax = e
         .join(dist.select($"node".as("src"), $"dist".as("__d0")), Seq("src"))
         .select($"dst".as("node"), ($"__d0" + $"w".cast("long")).as("dist"))
-      dist = roll.next(dist.unionByName(relax)
+      dist = Iterate.advance(dist, dist.unionByName(relax)
         .groupBy($"node").agg(min($"dist").as("dist")))
     }
     dist
@@ -1147,7 +1123,7 @@ object Graph {
     * with no out-edges drops (the walk ends — directed sinks).
     * Output: (walker, node, step) trajectory rows, step 0 = seed. */
   def randomWalk(edges: DataFrame, seeds: DataFrame,
-      steps: Int): DataFrame = {
+      steps: Int): DataFrame = Iterate.scope {
     val spark = edges.sparkSession
     import spark.implicits._
     import org.apache.spark.sql.expressions.Window
@@ -1163,22 +1139,20 @@ object Graph {
       .select($"node".as("walker"), $"node", lit(0L).as("step")))
     // the trajectory is the union of the per-step frames, assembled
     // ONCE at the end: each step's frame is already a checkpointed
-    // leaf, so re-materializing the GROWING union every step (the old
-    // shape) paid O(steps²) rows of copy for nothing. The per-step
-    // checkpoints must all stay live for the final union, so they are
-    // kept out of the rolling slot (bounded: steps+1 walker-sized
-    // frames; the caller's block sweep releases them).
+    // leaf, so re-materializing the GROWING union every step paid
+    // O(steps²) rows of copy for nothing. The per-step checkpoints
+    // must all stay live for the final union.
     val stepFrames = scala.collection.mutable.ArrayBuffer(cur)
-    // the pick frame checkpoints per step (rolling slot — its only
+    // the pick frame checkpoints per step (one live pick — its only
     // reader is the step's idxed join): with its MEASURED walker-sized
     // stats it broadcasts into the adjacency lookup, so the data-sized
     // idxed frame is never re-shuffled per step (r17 profile: 17.45 MB
     // × steps of idxed exchanges removed from q232/q238). A derived
     // pick (a join subtree) could never broadcast — Catalyst's
     // size-only join estimate is the product of its children.
-    val pRoll = new Iterate.RollingCheckpoint
+    var pick: DataFrame = null
     for (k <- 1 to steps) {
-      val pick = pRoll.next(cur
+      pick = Iterate.advance(pick, cur
         .join(deg, cur("node") === deg("src"))
         .select($"walker", cur("node").as("at"),
           (TextOps.h64(concat($"walker", lit(s"|$k|"), cur("node")))
@@ -1188,17 +1162,11 @@ object Graph {
         .select($"walker", $"dst".as("node"), lit(k.toLong).as("step")))
       stepFrames += cur
     }
-    pRoll.close()
-    // materialize the assembled trajectory ONCE and release the
-    // per-step leaves (r17 ADVICE: without an in-call release they
-    // stayed persisted for the session on library callers — the doc
-    // relied on a caller-side sweep only the bench mains perform).
-    // One walker-sized × (steps+1) copy, O(steps) total — and every
-    // downstream consumer now plans over a single checkpoint leaf
-    // instead of an 11-leaf union.
-    val out = Iterate.cut(stepFrames.reduceLeft(_.unionByName(_)))
-    stepFrames.foreach(Iterate.release)
-    out
+    // materialize the assembled trajectory ONCE: one walker-sized ×
+    // (steps+1) copy, O(steps) total — and every downstream consumer
+    // plans over a single checkpoint leaf instead of an 11-leaf union
+    // (the scope then releases the per-step leaves)
+    Iterate.cut(stepFrames.reduceLeft(_.unionByName(_)))
   }
 
   /** Oracle twin of [[randomWalk]] over caller-defined `ed(src, dst)`
@@ -1244,7 +1212,7 @@ object Graph {
     * whose end lacks a label are dropped by the inner attach —
     * label completeness is the caller's contract). Output:
     * (label, n_nodes, d_c, e_in, q_term) + the '__all__' total. */
-  def modularity(edges: DataFrame, comm: DataFrame): DataFrame = {
+  def modularity(edges: DataFrame, comm: DataFrame): DataFrame = Iterate.scope {
     val spark = edges.sparkSession
     import spark.implicits._
     val e2 = edges
@@ -1800,11 +1768,11 @@ object Graph {
     * the whole frame (contraction keeps Q invariant across level
     * boundaries). Per-sweep lineage cuts via `Iterate.cut` (the
     * checkpoint-statistics clamp — see Iterate's doc for the
-    * BigInteger stall this prevents), released batch-per-level once
-    * the level's tagged union materializes. `edgesW(src, dst, w)`
+    * BigInteger stall this prevents), released when their level's
+    * scope returns. `edgesW(src, dst, w)`
     * symmetric, weighted, already lineage-cut by the caller. */
   def louvainConverge(edgesW: DataFrame, maxSweeps: Int, maxLevels: Int,
-      minGainDen: Long = 0L): DataFrame = {
+      minGainDen: Long = 0L): DataFrame = Iterate.scope {
     val spark = edgesW.sparkSession
     import spark.implicits._
     var ew = edgesW
@@ -1812,67 +1780,68 @@ object Graph {
     var level = 1
     var levelMoved = -1L
     while (level <= maxLevels && levelMoved != 0L) {
-      // per-sweep checkpoints live until the level's tagged union
-      // materializes, then release in one batch (Iterate discipline;
-      // ew / labT stay persisted — the lazy output frame reads them)
-      val cps = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
-      // the level's degree frame, cut ONCE (r18): every sweep below
-      // reads it instead of re-aggregating the edge frame — across
-      // 20–28 sweeps that was the largest avoidable per-sweep pass —
-      // and the singleton init is a node-sized scan of it rather than
-      // an edge-sized distinct
-      val degL = Iterate.cut(
-        ew.groupBy($"src".as("node")).agg(sum($"w").as("k")))
-      cps += degL
-      var comm = Iterate.cut(degL.select($"node", $"node".as("label")))
-      cps += comm
-      // every sweep's labels accumulate under their sweep tag; the
-      // per-sweep n_moved count doubles as the loop condition, so
-      // the output frame and the control flow read the same joins
-      var lab = comm.withColumn("sweep", lit(0L))
-      var sweep = 0
-      var moved = -1L
-      levelMoved = 0L
-      while (moved != 0L && sweep < maxSweeps) {
-        val next = Iterate.cut(
-          louvainMoveBatch(ew, degL, comm, minGainDen, 1L, 1L))
-        cps += next
-        moved = next
-          .join(comm.select($"node", $"label".as("prev")), Seq("node"))
-          .filter($"label" =!= $"prev").count()
-        sweep += 1
-        levelMoved += moved
-        lab = lab.unionByName(next.withColumn("sweep", lit(sweep.toLong)))
-        comm = next
+      // one scope per level: its per-sweep checkpoints are released
+      // when the level returns; labT, this level's ew and the next
+      // level's ew stay persisted — the lazy output frame and the next
+      // level read them
+      val (rows, ewNext) = Iterate.scope {
+        // the level's degree frame, cut ONCE (r18): every sweep below
+        // reads it instead of re-aggregating the edge frame — across
+        // 20–28 sweeps that was the largest avoidable per-sweep pass —
+        // and the singleton init is a node-sized scan of it rather than
+        // an edge-sized distinct
+        val degL = Iterate.cut(
+          ew.groupBy($"src".as("node")).agg(sum($"w").as("k")))
+        var comm = Iterate.cut(degL.select($"node", $"node".as("label")))
+        // every sweep's labels accumulate under their sweep tag; the
+        // per-sweep n_moved count doubles as the loop condition, so
+        // the output frame and the control flow read the same joins
+        var lab = comm.withColumn("sweep", lit(0L))
+        var sweep = 0
+        var moved = -1L
+        levelMoved = 0L
+        while (moved != 0L && sweep < maxSweeps) {
+          val next = Iterate.cut(
+            louvainMoveBatch(ew, degL, comm, minGainDen, 1L, 1L))
+          moved = next
+            .join(comm.select($"node", $"label".as("prev")), Seq("node"))
+            .filter($"label" =!= $"prev").count()
+          sweep += 1
+          levelMoved += moved
+          lab = lab.unionByName(next.withColumn("sweep", lit(sweep.toLong)))
+          comm = next
+        }
+        // the convergence witness is a CONTRACT, not an assumption: a
+        // cap hit with moves still accepted must fail loudly, because
+        // the static-chain oracle stops at the same horizon and the
+        // mismatch would otherwise be invisible to every hash check
+        if (moved != 0L)
+          throw new IllegalStateException(
+            s"louvainConverge: sweep cap $maxSweeps hit at level $level " +
+              s"with $moved moves still accepted — the emitted frame " +
+              "would lack its n_moved=0 witness; raise maxSweeps")
+        val labT = Iterate.cut(lab) // the level's lineage cut
+        val ewNext =
+          if (levelMoved != 0L && level < maxLevels)
+            Iterate.cut(contractWeighted(ew, comm))
+          else ew
+        val nc = labT.groupBy($"sweep")
+          .agg(countDistinct($"label").as("n_comms"))
+        val mv = labT.join(
+            labT.select(($"sweep" + 1).as("sweep"), $"node",
+              $"label".as("prev")), Seq("sweep", "node"))
+          .groupBy($"sweep")
+          .agg(sum(when($"label" =!= $"prev", 1L).otherwise(0L))
+            .as("n_moved"))
+        val qs = modularityWeightedAllTagged(ew,
+          labT.select($"sweep".as("tag"), $"node", $"label"))
+        (nc.join(mv, Seq("sweep"), "left")
+          .join(qs.select($"tag".as("sweep"), $"q"), Seq("sweep"))
+          .select(lit(level.toLong).as("level"), $"sweep", $"n_comms",
+            coalesce($"n_moved", lit(0L)).as("n_moved"), $"q"), ewNext)
       }
-      // the convergence witness is a CONTRACT, not an assumption: a
-      // cap hit with moves still accepted must fail loudly, because
-      // the static-chain oracle stops at the same horizon and the
-      // mismatch would otherwise be invisible to every hash check
-      if (moved != 0L)
-        throw new IllegalStateException(
-          s"louvainConverge: sweep cap $maxSweeps hit at level $level " +
-            s"with $moved moves still accepted — the emitted frame " +
-            "would lack its n_moved=0 witness; raise maxSweeps")
-      val labT = Iterate.cut(lab) // the level's lineage cut
-      val ewLevel = ew // the frame this level's sweeps and Q ran on
-      if (levelMoved != 0L && level < maxLevels)
-        ew = Iterate.cut(contractWeighted(ewLevel, comm))
-      cps.foreach(Iterate.release)
-      val nc = labT.groupBy($"sweep")
-        .agg(countDistinct($"label").as("n_comms"))
-      val mv = labT.join(
-          labT.select(($"sweep" + 1).as("sweep"), $"node",
-            $"label".as("prev")), Seq("sweep", "node"))
-        .groupBy($"sweep")
-        .agg(sum(when($"label" =!= $"prev", 1L).otherwise(0L))
-          .as("n_moved"))
-      val qs = modularityWeightedAllTagged(ewLevel,
-        labT.select($"sweep".as("tag"), $"node", $"label"))
-      out += nc.join(mv, Seq("sweep"), "left")
-        .join(qs.select($"tag".as("sweep"), $"q"), Seq("sweep"))
-        .select(lit(level.toLong).as("level"), $"sweep", $"n_comms",
-          coalesce($"n_moved", lit(0L)).as("n_moved"), $"q")
+      out += rows
+      ew = ewNext
       level += 1
     }
     if (levelMoved != 0L)
@@ -1966,7 +1935,7 @@ object Graph {
     * correctness anchor: improving the contracted partition IS
     * improving the original. Output: (label, d_c, e_in, q_term) +
     * the '__all__' integer-total row. */
-  def modularityWeighted(edges: DataFrame, comm: DataFrame): DataFrame = {
+  def modularityWeighted(edges: DataFrame, comm: DataFrame): DataFrame = Iterate.scope {
     val spark = edges.sparkSession
     import spark.implicits._
     val e2 = edges
@@ -2070,7 +2039,7 @@ object Graph {
     * community — min(vol, rest) = 0 has no boundary to score).
     * `edges(src, dst)` symmetric distinct; `comm(node, label)` total
     * over graph nodes. Output: (label, vol, cut, phi). */
-  def conductance(edges: DataFrame, comm: DataFrame): DataFrame = {
+  def conductance(edges: DataFrame, comm: DataFrame): DataFrame = Iterate.scope {
     val spark = edges.sparkSession
     import spark.implicits._
     val e2 = edges

@@ -75,7 +75,7 @@ object Pca {
     * deterministic uniform start v0 = 1/√d: returns (i, v, lambda)
     * with v the unit component and lambda the last iterate's ‖Σv‖ —
     * the standard eigenvalue estimate at convergence. */
-  def powerComponent(cov: DataFrame, iters: Int): DataFrame = {
+  def powerComponent(cov: DataFrame, iters: Int): DataFrame = Iterate.scope {
     require(iters >= 1, s"iters=$iters")
     // cut the corpus lineage once: every iteration's checkpoint would
     // otherwise re-run the covariance job (measured 4-5 corpus passes
@@ -86,19 +86,16 @@ object Pca {
     var v = dims.crossJoin(broadcast(dcnt))
       .select(col("j"), (lit(1.0) / sqrt(col("d"))).as("v"))
     var lam: DataFrame = null
-    // two rolling slots (Iterate discipline). lambda must checkpoint
-    // per round too: the final `lam` read AFTER the loop would
-    // otherwise re-derive from the PREVIOUS round's v — whose blocks
-    // the v-slot has already released.
-    val vRoll = new Iterate.RollingCheckpoint
-    val lamRoll = new Iterate.RollingCheckpoint
+    // lambda must checkpoint per round too: the final `lam` read AFTER
+    // the loop would otherwise re-derive from the PREVIOUS round's v —
+    // whose blocks advance has already released.
     for (_ <- 1 to iters) {
       val u = covC.join(broadcast(v), Seq("j"))
         .groupBy(col("i"))
         .agg(Exact.dsumFine(col("cov") * col("v")).as("u"))
-      lam = lamRoll.next(
+      lam = Iterate.advance(lam,
         u.agg(sqrt(Exact.dsumFine(col("u") * col("u"))).as("lambda")))
-      v = vRoll.next(u.crossJoin(broadcast(lam))
+      v = Iterate.advance(v, u.crossJoin(broadcast(lam))
         .select(col("i").as("j"), (col("u") / col("lambda")).as("v")))
     }
     v.crossJoin(broadcast(lam))

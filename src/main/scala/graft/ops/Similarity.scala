@@ -270,17 +270,13 @@ object Similarity {
     *
     * Output: (cid, cemb: Array[Double], cnorm2) — drop-in for every
     * consumer of the seed-centroid frame. */
-  def lloydCentroids(all: DataFrame, seeds: DataFrame, iters: Int): DataFrame = {
+  def lloydCentroids(all: DataFrame, seeds: DataFrame, iters: Int): DataFrame = Iterate.scope {
     val comp = all
       .select(col("id"), posexplode(col("emb")).as(Seq("i", "e")))
       .withColumn("e", col("e").cast("double"))
     var cents = seeds.select(col("cid"),
       expr("transform(cemb, x -> CAST(x AS DOUBLE))").as("cemb"),
       col("cnorm2"))
-    // rolling slot: round k's centroid checkpoint releases round k−1's
-    // blocks (Iterate discipline — K·dim rows each, but 50 rounds of
-    // them is still leak-shaped)
-    val roll = new Iterate.RollingCheckpoint
     for (_ <- 1 to iters) {
       val assign = ivfAssign(all, cents).select(col("id"), col("cid"))
       val means = assign.join(comp, Seq("id"))
@@ -289,7 +285,7 @@ object Similarity {
         .groupBy(col("cid"))
         .agg(expr("transform(array_sort(collect_list(struct(i, m))), x -> x.m)")
           .as("__newEmb"))
-      cents = roll.next(cents.join(means, Seq("cid"), "left")
+      cents = Iterate.advance(cents, cents.join(means, Seq("cid"), "left")
         .select(col("cid"),
           coalesce(col("__newEmb"), col("cemb")).as("cemb"))
         .withColumn("cnorm2", sqNormExact("cemb")))

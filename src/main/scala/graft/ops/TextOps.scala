@@ -269,7 +269,8 @@ object TextOps {
     * small-star formulation — the per-round plan is the same shape.
     * Inputs: edges (d1, d2) undirected, nodes (node). Output:
     * (node, cluster) where cluster = min node id in the component. */
-  def connectedComponents(edges: DataFrame, nodes: DataFrame, maxIters: Int = 20): DataFrame = {
+  def connectedComponents(edges: DataFrame, nodes: DataFrame,
+      maxIters: Int = 20): DataFrame = Iterate.scope {
     val sym = edges.select(col("d1").as("src"), col("d2").as("dst"))
       .unionByName(edges.select(col("d2").as("src"), col("d1").as("dst")))
       .distinct().cache()
@@ -279,11 +280,10 @@ object TextOps {
     // that can never change. Singletons rejoin as their own cluster at
     // the end. Seeding with min(self, neighbors) also saves a full
     // round: a clique converges at the seed.
-    // localCheckpoint truncates lineage each round — without it, the plan
+    // a cut truncates lineage each round — without it, the plan
     // (and Catalyst planning/codegen time) grows with the iteration
     // count, the classic iterative-Spark trap.
-    val roll = new Iterate.RollingCheckpoint
-    var labels = roll.next(sym
+    var labels = Iterate.cut(sym
       .groupBy(col("src")).agg(min(col("dst")).as("nmin"))
       .select(col("src").as("node"),
         least(col("src"), col("nmin")).as("cluster")))
@@ -296,15 +296,13 @@ object TextOps {
     while (!done && iter < maxIters) {
       val neighborMin = sym.join(labels, col("dst") === col("node"))
         .groupBy(col("src")).agg(min(col("cluster")).as("nmin"))
-      // roll.next releases the superseded round's blocks once the new
-      // checkpoint has materialized (Iterate discipline)
-      val next = roll.next(labels.join(neighborMin, col("node") === col("src"), "left")
-        .select(col("node"),
-          least(col("cluster"), coalesce(col("nmin"), col("cluster"))).as("cluster")))
-      val s = next.agg(coalesce(sum(col("cluster")), lit(0L))).head().getLong(0)
+      labels = Iterate.advance(labels,
+        labels.join(neighborMin, col("node") === col("src"), "left")
+          .select(col("node"),
+            least(col("cluster"), coalesce(col("nmin"), col("cluster"))).as("cluster")))
+      val s = labels.agg(coalesce(sum(col("cluster")), lit(0L))).head().getLong(0)
       done = s == prevSum
       prevSum = s
-      labels = next
       iter += 1
     }
     sym.unpersist()
@@ -335,7 +333,7 @@ object TextOps {
     * Lineage is truncated per alternation (localCheckpoint), the
     * iterative-Spark requirement. */
   def connectedComponentsStars(edges: DataFrame, nodes: DataFrame,
-      maxIters: Int = 25): DataFrame = {
+      maxIters: Int = 25): DataFrame = Iterate.scope {
     def canon(e: DataFrame): DataFrame =
       e.select(greatest(col("s"), col("d")).as("s"),
         least(col("s"), col("d")).as("d"))
@@ -380,8 +378,8 @@ object TextOps {
         next.join(cur, Seq("s", "d"), "left_anti").isEmpty &&
         cur.join(next, Seq("s", "d"), "left_anti").isEmpty
       // the convergence anti-joins above are the last reads of the
-      // superseded round — release its blocks only AFTER them (a
-      // rolling slot would free them before the set-equality check)
+      // superseded round — release its blocks only AFTER them
+      // (Iterate.advance would free them before the set-equality check)
       Iterate.release(cur)
       curSig = nextSig
       cur = next
@@ -436,7 +434,7 @@ object TextOps {
     * [[connectedComponents]] on the union graph (q223 proves it
     * against the from-scratch oracle). */
   def connectedComponentsIncremental(labels: DataFrame,
-      newEdges: DataFrame, maxIters: Int = 20): DataFrame = {
+      newEdges: DataFrame, maxIters: Int = 20): DataFrame = Iterate.scope {
     val l1 = labels.select(col("node").as("d1"), col("cluster").as("__s1"))
     val l2 = labels.select(col("node").as("d2"), col("cluster").as("__s2"))
     val contracted = newEdges
@@ -458,7 +456,7 @@ object TextOps {
       .select(col("node"), col("node").as("cluster"))
     // `contracted` stays checkpointed: the lazy super-node universe
     // inside superLabels' final join still reads it when the caller
-    // materializes (the per-query sweep reclaims the blocks after)
+    // materializes, so the scope keeps it
     labels.unionByName(newNodes)
       .join(broadcast(superLabels), col("cluster") === col("__super"), "left")
       .select(col("node"), coalesce(col("__comp"), col("cluster")).as("cluster"))

@@ -1528,7 +1528,7 @@ object GraphQueries extends QueryGroup {
     * coarsest merges. */
   private val q246 = Q(
     "q246_louvain_resolution",
-    (s, dir) => {
+    (s, dir) => graft.ops.Iterate.scope {
       import s.implicits._
       val li = Tables(s, dir, "lineitem").select($"l_orderkey", $"l_suppkey")
       val ord = Tables(s, dir, "orders").select($"o_orderkey", $"o_custkey")
@@ -1540,22 +1540,17 @@ object GraphQueries extends QueryGroup {
       val ew = graft.ops.Iterate.cut(fwd.unionByName(
           fwd.select($"dst".as("src"), $"src".as("dst")))
         .withColumn("w", lit(1L)))
-      val cps = scala.collection.mutable.ArrayBuffer.empty[
-        org.apache.spark.sql.DataFrame]
       var comm = graft.ops.Iterate.cut(
         ew.select($"src".as("node")).distinct()
           .select($"node", $"node".as("label")))
-      cps += comm
       var lab = comm.withColumn("sweep", lit(0L))
       for (k <- 1 to GammaSweeps) {
         val next = graft.ops.Iterate.cut(Graph.louvainMoveBatch(
           ew, comm, LouvainMinGainDen, LouvainGammaNum, LouvainGammaDen))
-        cps += next
         lab = lab.unionByName(next.withColumn("sweep", lit(k.toLong)))
         comm = next
       }
       val labT = graft.ops.Iterate.cut(lab)
-      cps.foreach(graft.ops.Iterate.release)
       val nc = labT.groupBy($"sweep")
         .agg(countDistinct($"label").as("n_comms"))
       val mv = labT.join(
@@ -1651,7 +1646,7 @@ object GraphQueries extends QueryGroup {
     * checkpointed (`Iterate.cut`), so consuming this frame several
     * times re-runs only the one node-keyed join, never the sweeps. */
   private def stabilityPairs(s: org.apache.spark.sql.SparkSession,
-      dir: String): DataFrame = {
+      dir: String): DataFrame = graft.ops.Iterate.scope {
     import s.implicits._
     val li = Tables(s, dir, "lineitem").select($"l_orderkey", $"l_suppkey")
     val ord = Tables(s, dir, "orders").select($"o_orderkey", $"o_custkey")
@@ -1667,12 +1662,9 @@ object GraphQueries extends QueryGroup {
       var comm = graft.ops.Iterate.cut(
         ew.select($"src".as("node")).distinct()
           .select($"node", $"node".as("label")))
-      for (_ <- 1 to GammaSweeps) {
-        val next = graft.ops.Iterate.cut(
+      for (_ <- 1 to GammaSweeps)
+        comm = graft.ops.Iterate.advance(comm,
           Graph.louvainMoveBatch(ew, comm, LouvainMinGainDen, gn, gd))
-        graft.ops.Iterate.release(comm)
-        comm = next
-      }
       comm
     }
     val la = finalLabels(1L, 1L)

@@ -1245,38 +1245,31 @@ object SimilarityQueries extends QueryGroup {
     * distance, k is small, and nothing ever pairs data×data. */
   private val q213 = Q(
     "q213_kcenter_coreset",
-    (s, dir) => {
+    (s, dir) => graft.ops.Iterate.scope {
       import s.implicits._
       val all = vecs(s, dir).select($"id", $"emb")
       val k = 5
-      // rolling slots (Iterate discipline): the coverage frame and the
-      // picks union each keep ONE live round; per-step pick singletons
-      // release once both consumers have materialized
-      val mindRoll = new graft.ops.Iterate.RollingCheckpoint
-      val picksRoll = new graft.ops.Iterate.RollingCheckpoint
-      val first = all.orderBy($"id".asc).limit(1).transform(graft.ops.Iterate.cut)
-      var picks = picksRoll.next(first.select($"id", lit(1L).as("pick_order"),
-        lit(null).cast("double").as("min_dist2")))
-      var mind = mindRoll.next(all
-        .crossJoin(broadcast(first.select($"emb".as("cemb"))))
+      // the coverage frame, the picks union and the pick singleton each
+      // keep ONE live round
+      var pick = all.orderBy($"id".asc).limit(1).transform(graft.ops.Iterate.cut)
+      var picks = graft.ops.Iterate.cut(pick.select($"id",
+        lit(1L).as("pick_order"), lit(null).cast("double").as("min_dist2")))
+      var mind = graft.ops.Iterate.cut(all
+        .crossJoin(broadcast(pick.select($"emb".as("cemb"))))
         .select($"id", $"emb",
           Similarity.sqDistExact("emb", "cemb").as("d")))
-      graft.ops.Iterate.release(first)
       for (step <- 2 to k) {
-        // Iterate.cut: structural loop discipline (IterateDisciplineSpec)
-        val pick = graft.ops.Iterate.cut(mind
+        pick = graft.ops.Iterate.advance(pick, mind
           .join(picks.select($"id"), Seq("id"), "left_anti")
           .orderBy($"d".desc, $"id".asc).limit(1))
-        picks = picksRoll.next(picks.unionByName(pick.select($"id",
-          lit(step.toLong).as("pick_order"), $"d".as("min_dist2"))))
+        picks = graft.ops.Iterate.advance(picks, picks.unionByName(pick.select(
+          $"id", lit(step.toLong).as("pick_order"), $"d".as("min_dist2"))))
         if (step < k)
-          mind = mindRoll.next(mind
+          mind = graft.ops.Iterate.advance(mind, mind
             .crossJoin(broadcast(pick.select($"emb".as("cemb"))))
             .select($"id", $"emb",
               least($"d", Similarity.sqDistExact("emb", "cemb")).as("d")))
-        graft.ops.Iterate.release(pick)
       }
-      mindRoll.close()
       picks.orderBy($"pick_order")
     },
     Some(s"""
@@ -1306,7 +1299,7 @@ object SimilarityQueries extends QueryGroup {
     * engine-deterministic. */
   private val q217 = Q(
     "q217_facility_location",
-    (s, dir) => {
+    (s, dir) => graft.ops.Iterate.scope {
       import s.implicits._
       val all = vecs(s, dir)
       val pool = all.filter($"id" < 60)
@@ -1316,11 +1309,9 @@ object SimilarityQueries extends QueryGroup {
           round(Similarity.dotExact("emb", "cemb") /
             (sqrt($"norm2") * sqrt($"cnorm2")), 6).as("sim"))
         .transform(graft.ops.Iterate.cut)
-      // rolling slots (Iterate discipline): coverage and the picks
-      // union keep one live round each; per-step pick singletons
-      // release after both consumers materialize
-      val curRoll = new graft.ops.Iterate.RollingCheckpoint
-      val picksRoll = new graft.ops.Iterate.RollingCheckpoint
+      // coverage, the picks union and the pick singleton keep one live
+      // round each
+      var pick: DataFrame = null
       var picks: DataFrame = null
       var cur: DataFrame = null
       for (step <- 1 to 4) {
@@ -1330,27 +1321,23 @@ object SimilarityQueries extends QueryGroup {
         val cand =
           if (picks == null) base
           else base.join(picks.select($"cid"), Seq("cid"), "left_anti")
-        // Iterate.cut: structural loop discipline (IterateDisciplineSpec)
-        val pick = graft.ops.Iterate.cut(cand.groupBy($"cid")
+        pick = graft.ops.Iterate.advance(pick, cand.groupBy($"cid")
           .agg(sum(greatest($"sim" - $"cur", lit(0.0))
             .cast("decimal(18,6)")).as("g"))
           .orderBy($"g".desc, $"cid".asc).limit(1)
           .select($"cid", lit(step.toLong).as("pick_order"),
             $"g".cast("double").as("gain")))
-        picks = picksRoll.next(
+        picks = graft.ops.Iterate.advance(picks,
           if (picks == null) pick else picks.unionByName(pick))
         val pickSims = sims
           .join(broadcast(pick.select($"cid")), Seq("cid"))
           .select($"x", $"sim")
-        cur = curRoll.next(
+        cur = graft.ops.Iterate.advance(cur,
           if (cur == null) pickSims.select($"x",
               greatest($"sim", lit(0.0)).as("cur"))
           else cur.join(pickSims, Seq("x"))
             .select($"x", greatest($"cur", $"sim").as("cur")))
-        graft.ops.Iterate.release(pick)
       }
-      curRoll.close()
-      graft.ops.Iterate.release(sims)
       picks.select($"pick_order", $"cid", $"gain").orderBy($"pick_order")
     },
     Some {

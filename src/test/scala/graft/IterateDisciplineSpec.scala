@@ -20,6 +20,12 @@ import org.scalatest.funsuite.AnyFunSuite
   * flags any `.localCheckpoint(` call inside one. One-shot pre-loop
   * barriers stay legal — a single hop cannot compound — and
   * Iterate.scala itself is exempt (it IS the blessed wrapper).
+  *
+  * The same scanner pins checkpoint OWNERSHIP under
+  * src/main/scala/graft/ops: every public operator whose body cuts
+  * (`Iterate.cut` / `Iterate.advance`, directly or through an unscoped
+  * private helper of its file) must run that body in `Iterate.scope`,
+  * which releases every cut the operator's result cannot read.
   */
 class IterateDisciplineSpec extends AnyFunSuite {
 
@@ -161,6 +167,61 @@ class IterateDisciplineSpec extends AnyFunSuite {
       .map(m => clean.substring(0, m.start).count(_ == '\n') + 1)
   }
 
+  /** Public members of the top-level object in `src` that cut lineage
+    * without owning their cuts: the body calls `Iterate.cut` or
+    * `Iterate.advance` — directly, or through a private helper of the
+    * same source that is not itself scoped — but is not an
+    * `Iterate.scope`. A member's body runs from its signature's `=` to
+    * the next member `def`; private helpers are exempt themselves,
+    * since their unscoped cuts count against each public caller. */
+  private[graft] def unscopedCutters(src: String): Seq[String] = {
+    val clean = stripNoise(src)
+    val depth = new Array[Int](clean.length + 1)
+    var d = 0
+    for (i <- clean.indices) {
+      depth(i) = d
+      if (clean(i) == '{') d += 1 else if (clean(i) == '}') d -= 1
+    }
+    final case class Member(name: String, isPrivate: Boolean, scoped: Boolean,
+        body: String)
+    val defs = """(?m)^[ \t]*((?:\w+(?:\[\w+\])?[ \t]+)*)def\s+(\w+)""".r
+      .findAllMatchIn(clean).filter(m => depth(m.start(2)) == 1).toSeq
+    val members = defs.zipWithIndex.map { case (m, k) =>
+      val end = if (k + 1 < defs.size) defs(k + 1).start else clean.length
+      // the body starts after the signature's `=` (not `=>`, `==`,
+      // `<=`, `>=`, `!=`) outside parameter lists and type arguments
+      var j = m.end; var nest = 0; var eq = -1
+      while (eq < 0 && j < end) {
+        val c = clean(j)
+        val after = if (j + 1 < clean.length) clean(j + 1) else ' '
+        if (c == '(' || c == '[') nest += 1
+        else if (c == ')' || c == ']') nest -= 1
+        else if (c == '=' && nest == 0 && after != '>' && after != '=' &&
+            !"<>!=".contains(clean(j - 1))) eq = j
+        j += 1
+      }
+      val body = if (eq < 0) "" else clean.substring(eq + 1, end).trim
+      Member(m.group(2), m.group(1).matches("(?s).*\\b(private|protected)\\b.*"),
+        body.startsWith("Iterate.scope"), body)
+    }
+    val cuts = "\\bIterate\\.(cut|advance)\\b".r
+    def calls(body: String, names: Set[String]) =
+      names.exists(n => s"\\b$n\\b".r.findFirstIn(body).nonEmpty)
+    // unscoped private helpers that cut, closed over helper-to-helper calls
+    var helpers = Set.empty[String]
+    var grew = true
+    while (grew) {
+      val next = members.filter(m => m.isPrivate && !m.scoped &&
+        (cuts.findFirstIn(m.body).nonEmpty || calls(m.body, helpers)))
+        .map(_.name).toSet
+      grew = next != helpers
+      helpers = next
+    }
+    members.filter(m => !m.isPrivate && !m.scoped &&
+      (cuts.findFirstIn(m.body).nonEmpty || calls(m.body, helpers)))
+      .map(_.name)
+  }
+
   test("scanner flags a synthetic bare localCheckpoint inside a loop") {
     val bad = """
       object X {
@@ -259,5 +320,46 @@ class IterateDisciplineSpec extends AnyFunSuite {
     assert(offenders.isEmpty,
       "bare localCheckpoint inside a loop body (use Iterate.cut — " +
         s"see Iterate.scala's doc): ${offenders.mkString(", ")}")
+  }
+
+  test("scanner flags a public operator that cuts outside Iterate.scope") {
+    val src = """
+      object X {
+        /** doc comment mentioning Iterate.cut is noise */
+        def loop(df: DF, n: Int = 3): DF = {
+          var d = Iterate.cut(df)
+          for (_ <- 1 to n) d = Iterate.advance(d, step(d))
+          d
+        }
+        def owned(df: DF): DF = Iterate.scope {
+          Iterate.cut(df.filter(x => x == 1))
+        }
+        private def barrier(df: DF): DF = df.transform(Iterate.cut)
+        def viaHelper(df: DF): DF = barrier(df).select("x")
+        def viaScopedOperator(df: DF): DF = owned(df)
+        def viaScopedHelper(df: DF): DF =
+          Iterate.scope(barrier(df))
+      }"""
+    assert(unscopedCutters(src) == Seq("loop", "viaHelper"),
+      unscopedCutters(src).toString)
+  }
+
+  test("src/main/scala/graft/ops: every public operator that cuts runs in Iterate.scope") {
+    import java.nio.file.{Files, Paths}
+    import scala.jdk.CollectionConverters._
+    val root = Paths.get("src/main/scala/graft/ops")
+    assert(Files.isDirectory(root), s"run from the repo root: $root missing")
+    val sources = Files.list(root).iterator().asScala
+      .filter(_.toString.endsWith(".scala"))
+      .filterNot(_.getFileName.toString == "Iterate.scala").toSeq
+    // the scan must see the cutting operators at all
+    assert(sources.exists(_.getFileName.toString == "Graph.scala"))
+    val offenders = sources.flatMap { p =>
+      unscopedCutters(new String(Files.readAllBytes(p), "UTF-8"))
+        .map(name => s"${p.getFileName}: $name")
+    }
+    assert(offenders.isEmpty,
+      "public operator cuts lineage outside Iterate.scope (its internal " +
+        s"cuts would leak to the caller): ${offenders.mkString(", ")}")
   }
 }
