@@ -75,17 +75,15 @@ object Pipeline {
   def run(spark: SparkSession, raw: DataFrame, task: Task, root: String,
       keys: Seq[String] = Seq.empty): Either[String, String] =
     try {
-      // observe() rides the write job itself, so the status row's count
-      // costs nothing extra — re-reading the written files (or counting
-      // the frame up front) would scan every output row a second time
-      val obs = org.apache.spark.sql.Observation(s"sink_${task.id}")
-      val out = frame(raw, task, keys)
-        .observe(obs, count(lit(1)).as("rows"))
       // each planner slice owns its own `period` partition of the
       // variable's directory, so slices never overwrite each other
-      val dir = Sink.writeDrs(out, root, task.key,
-        Sink.periodOf(task.tstartUs, task.tendUs), task.attrs)
-      val n = obs.get("rows").asInstanceOf[Long]
+      val period = Sink.periodOf(task.tstartUs, task.tendUs)
+      val dir = Sink.writeDrs(frame(raw, task, keys), root, task.key,
+        period, task.attrs)
+      // the status row's count comes from the footers of the files the
+      // write just committed into the slice's partition: no data is
+      // re-read, and an empty slice leaves no partition and counts 0
+      val n = Sink.footerRows(spark, s"$dir/period=$period")
       Sink.appendStatus(spark, s"$root/_status", task.id, "processed", n)
       Right(dir)
     } catch {

@@ -1,8 +1,15 @@
 package graft.io
 
-import org.apache.hadoop.fs.{ChecksumFileSystem, Path}
+import org.apache.hadoop.fs.{ChecksumFileSystem, FileSystem, Path}
+import org.apache.parquet.example.data.simple.SimpleGroupFactory
+import org.apache.parquet.hadoop.ParquetFileReader
+import org.apache.parquet.hadoop.example.ExampleParquetWriter
+import org.apache.parquet.hadoop.util.{HadoopInputFile, HadoopStreams}
+import org.apache.parquet.io.{OutputFile, PositionOutputStream}
+import org.apache.parquet.schema.MessageTypeParser
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import java.nio.charset.StandardCharsets
+import scala.util.control.NonFatal
 
 /** Output sinks: DRS-style directory layout, deterministic file naming,
   * metadata sidecars, and the status bookkeeping table.
@@ -266,27 +273,88 @@ object Sink {
     * table) through the Hadoop FileSystem of its path — the one the
     * parquet beside it was written through — so a URI root such as
     * `file:///…` lands where the data did instead of being read as a
-    * relative local path. Overwrites. A checksummed local filesystem is
-    * unwrapped to its raw one: the artifact gets no `.crc` sibling, as
-    * with a plain java.nio write. */
+    * relative local path. Overwrites. */
   private def writeText(spark: SparkSession, path: String,
       text: String): Unit = {
     val p = new Path(path)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration) match {
-      case c: ChecksumFileSystem => c.getRawFileSystem
-      case f                     => f
-    }
-    val out = fs.create(p, true)
+    val out = rawFs(spark, p).create(p, true)
     try out.write(text.getBytes(StandardCharsets.UTF_8)) finally out.close()
   }
 
+  /** The Hadoop FileSystem of `p`, with a checksummed local filesystem
+    * unwrapped to its raw one: what is written through it gets no
+    * `.crc` sibling, as with a plain java.nio write. */
+  private def rawFs(spark: SparkSession, p: Path): FileSystem =
+    p.getFileSystem(spark.sparkContext.hadoopConfiguration) match {
+      case c: ChecksumFileSystem => c.getRawFileSystem
+      case f                     => f
+    }
+
+  /** The status row's parquet schema: the one Spark's own writer gives a
+    * `(String, String, Long, String)` row, so a `_status` directory that
+    * also holds files written by Spark reads back as one table. */
+  private val statusSchema = MessageTypeParser.parseMessageType(
+    """message spark_schema {
+      |  optional binary task_id (STRING);
+      |  optional binary status (STRING);
+      |  required int64 n_rows;
+      |  optional binary at (STRING);
+      |}""".stripMargin)
+
   /** Status bookkeeping (the filelist.status updates of mopper.py
-    * 107-112): one appended row per processed task. */
+    * 107-112): one appended row per processed task, written on the
+    * driver as its own parquet file — no Spark job, no commit protocol.
+    * The file is written under a hidden name (which Spark's reader and
+    * a `*.parquet` glob skip) and renamed to `part-<uuid>.parquet`, so
+    * a reader never sees it half-written and concurrent appends into
+    * one directory never share a file or a staging directory. */
   def appendStatus(spark: SparkSession, statusDir: String,
       taskId: String, status: String, rows: Long): Unit = {
-    import spark.implicits._
-    Seq((taskId, status, rows, java.time.Instant.now().toString))
-      .toDF("task_id", "status", "n_rows", "at")
-      .write.mode(SaveMode.Append).parquet(statusDir)
+    val dir = new Path(statusDir)
+    val fs = rawFs(spark, dir)
+    fs.mkdirs(dir)
+    val name = s"part-${java.util.UUID.randomUUID()}.parquet"
+    val tmp = new Path(dir, s".$name.tmp")
+    val row = new SimpleGroupFactory(statusSchema).newGroup()
+    Option(taskId).foreach(row.append("task_id", _))
+    Option(status).foreach(row.append("status", _))
+    row.append("n_rows", rows)
+    row.append("at", java.time.Instant.now().toString)
+    val file = new OutputFile {
+      def create(blockSizeHint: Long): PositionOutputStream =
+        HadoopStreams.wrap(fs.create(tmp, false))
+      def createOrOverwrite(blockSizeHint: Long): PositionOutputStream =
+        HadoopStreams.wrap(fs.create(tmp, true))
+      def supportsBlockSize(): Boolean = false
+      def defaultBlockSize(): Long = 0L
+    }
+    try {
+      val w = ExampleParquetWriter.builder(file).withType(statusSchema)
+        .withConf(spark.sparkContext.hadoopConfiguration).build()
+      try w.write(row) finally w.close()
+      if (!fs.rename(tmp, new Path(dir, name)))
+        throw new java.io.IOException(s"cannot rename $tmp into $statusDir")
+    } catch {
+      case e: Throwable =>
+        try fs.delete(tmp, false)
+        catch { case NonFatal(d) => e.addSuppressed(d) }
+        throw e
+    }
+  }
+
+  /** Rows held by the parquet files of one directory, summed from their
+    * footers — no data is read. A missing directory holds 0 rows. */
+  private[graft] def footerRows(spark: SparkSession, dir: String): Long = {
+    val p = new Path(dir)
+    val conf = spark.sparkContext.hadoopConfiguration
+    val fs = p.getFileSystem(conf)
+    if (!fs.exists(p)) 0L
+    else fs.listStatus(p).iterator
+      .filter(f => f.isFile && !f.getPath.getName.startsWith(".") &&
+        !f.getPath.getName.startsWith("_"))
+      .map { f =>
+        val r = ParquetFileReader.open(HadoopInputFile.fromStatus(f, conf))
+        try r.getRecordCount finally r.close()
+      }.sum
   }
 }

@@ -25,7 +25,11 @@ import org.scalatest.funsuite.AnyFunSuite
   * src/main/scala/graft/ops: every public operator whose body cuts
   * (`Iterate.cut` / `Iterate.advance`, directly or through an unscoped
   * private helper of its file) must run that body in `Iterate.scope`,
-  * which releases every cut the operator's result cannot read.
+  * which releases every cut the operator's result cannot read. And
+  * anywhere under src/main/scala/graft, queries included, every
+  * `Iterate.advance` must sit inside an `Iterate.scope` block: outside
+  * one, no scope registered `prev`, so `advance` never releases it and
+  * the loop keeps every round persisted.
   */
 class IterateDisciplineSpec extends AnyFunSuite {
 
@@ -77,6 +81,20 @@ class IterateDisciplineSpec extends AnyFunSuite {
     new String(out)
   }
 
+  /** End (exclusive) of the `(...)` or `{...}` group opening at `from`
+    * in comment-stripped source. */
+  private def groupEnd(clean: String, from: Int): Int = {
+    val open = clean(from)
+    val close = if (open == '(') ')' else '}'
+    var depth = 0; var j = from
+    while (j < clean.length) {
+      if (clean(j) == open) depth += 1
+      else if (clean(j) == close) { depth -= 1; if (depth == 0) return j + 1 }
+      j += 1
+    }
+    clean.length
+  }
+
   /** Body spans (inclusive start, exclusive end) of every while/for/
     * do loop in comment-stripped source: the parenthesized or braced
     * header group, then the braced body — or, for unbraced bodies
@@ -88,15 +106,6 @@ class IterateDisciplineSpec extends AnyFunSuite {
     * span can only make the discipline stricter — the repo's own
     * sources must still scan clean. */
   private[graft] def loopBodySpans(clean: String): Seq[(Int, Int)] = {
-    def matchGroup(from: Int, open: Char, close: Char): Int = {
-      var depth = 0; var j = from
-      while (j < clean.length) {
-        if (clean(j) == open) depth += 1
-        else if (clean(j) == close) { depth -= 1; if (depth == 0) return j + 1 }
-        j += 1
-      }
-      clean.length
-    }
     def skipWs(from: Int): Int = {
       var j = from
       while (j < clean.length && clean(j).isWhitespace) j += 1
@@ -134,21 +143,20 @@ class IterateDisciplineSpec extends AnyFunSuite {
         val cur = skipWs(m.end)
         val end =
           if (cur < clean.length && clean(cur) == '{')
-            matchGroup(cur, '{', '}')
+            groupEnd(clean, cur)
           else continuation(cur, base)
         Some((m.start, end))
       } else {
         val headStart = clean.indexWhere(c => c == '(' || c == '{', m.start)
         if (headStart < 0) None
         else {
-          val headEnd = matchGroup(headStart,
-            clean(headStart), if (clean(headStart) == '(') ')' else '}')
+          val headEnd = groupEnd(clean, headStart)
           var cur = skipWs(headEnd)
           // `for ... yield expr` — the yield keyword precedes the body
           if (clean.startsWith("yield", cur)) cur = skipWs(cur + 5)
           val end =
             if (cur < clean.length && clean(cur) == '{')
-              matchGroup(cur, '{', '}')
+              groupEnd(clean, cur)
             else continuation(cur, base)
           Some((m.start, end))
         }
@@ -220,6 +228,18 @@ class IterateDisciplineSpec extends AnyFunSuite {
     members.filter(m => !m.isPrivate && !m.scoped &&
       (cuts.findFirstIn(m.body).nonEmpty || calls(m.body, helpers)))
       .map(_.name)
+  }
+
+  /** 1-based lines of every `Iterate.advance` call in `src` that is not
+    * inside the argument block of an `Iterate.scope` call. */
+  private[graft] def unscopedAdvances(src: String): Seq[Int] = {
+    val clean = stripNoise(src)
+    val scopes = """\bIterate\.scope\s*(?:\[[^\]]*\]\s*)?[({]""".r
+      .findAllMatchIn(clean).map(m => (m.start, groupEnd(clean, m.end - 1)))
+      .toSeq
+    "\\bIterate\\.advance\\b".r.findAllMatchIn(clean).toSeq
+      .filterNot(m => scopes.exists { case (s, e) => m.start > s && m.start < e })
+      .map(m => clean.substring(0, m.start).count(_ == '\n') + 1)
   }
 
   test("scanner flags a synthetic bare localCheckpoint inside a loop") {
@@ -361,5 +381,47 @@ class IterateDisciplineSpec extends AnyFunSuite {
     assert(offenders.isEmpty,
       "public operator cuts lineage outside Iterate.scope (its internal " +
         s"cuts would leak to the caller): ${offenders.mkString(", ")}")
+  }
+
+  test("scanner flags an Iterate.advance outside every Iterate.scope") {
+    val src = """
+      object Q {
+        val bare = (s: S, dir: String) => {
+          var d = Iterate.cut(load(s, dir))
+          for (_ <- 1 to 3) d = Iterate.advance(d, step(d))
+          d
+        }
+        val scoped = (s: S, dir: String) => graft.ops.Iterate.scope {
+          var d = Iterate.cut(load(s, dir))
+          for (_ <- 1 to 3) d = Iterate.advance(d, step(d))
+          d
+        }
+        def typed(df: DF): DF = Iterate.scope[DF](
+          Iterate.advance(df, step(df)))
+        // a comment naming Iterate.advance is noise
+        def after(df: DF): DF = { Iterate.scope(df); Iterate.advance(df, df) }
+      }"""
+    assert(unscopedAdvances(src) == Seq(5, 16), unscopedAdvances(src).toString)
+  }
+
+  test("src/main/scala/graft: every Iterate.advance sits inside an Iterate.scope") {
+    import java.nio.file.{Files, Paths}
+    import scala.jdk.CollectionConverters._
+    val root = Paths.get("src/main/scala/graft")
+    assert(Files.isDirectory(root), s"run from the repo root: $root missing")
+    val sources = Files.walk(root).iterator().asScala
+      .filter(_.toString.endsWith(".scala"))
+      .filterNot(_.getFileName.toString == "Iterate.scala").toSeq
+    // the scan must see the query-level loops, not just the operators
+    val texts = sources.map(p => p -> new String(Files.readAllBytes(p), "UTF-8"))
+    assert(texts.exists { case (p, t) =>
+      p.getFileName.toString == "SimilarityQueries.scala" &&
+        t.contains("Iterate.advance") })
+    val offenders = texts.flatMap { case (p, t) =>
+      unscopedAdvances(t).map(line => s"$p:$line")
+    }
+    assert(offenders.isEmpty,
+      "Iterate.advance outside Iterate.scope never releases the previous " +
+        s"round: ${offenders.mkString(", ")}")
   }
 }

@@ -6,6 +6,7 @@ import graft.io.Sink
 import graft.plans.Planner
 import org.apache.spark.sql.functions._
 import java.nio.file.Files
+import scala.jdk.CollectionConverters._
 
 /** End-to-end slice (SURVEY.md §7.2): catalog resolve → plan → execute →
   * DRS output — the "tas monthly mean" pipeline of the reference's
@@ -20,6 +21,13 @@ class PipelineSpec extends SparkSpec {
       "area: time: mean", "", "Aday", "CM2"),
     Mapping("pr", "rain snow", "var[0]+var[1]", "kg m-2 s-1", "t y x", "1hr",
       "atmos", "area: time: mean", "", "Amon", "CM2"))
+
+  /** `n` hourly rows of one `fld` column, from 2024-01-01T00:00Z. */
+  private val t2024 =
+    java.time.Instant.parse("2024-01-01T00:00:00Z").toEpochMilli * 1000L
+  private def hourly(n: Long) = spark.range(n).select(
+    timestamp_micros(lit(t2024) + $"id" * 3600000000L).as("time"),
+    ($"id" * 1.5).as("fld"))
 
   test("catalog resolve: exact frequency wins, else nearest + resample step") {
     val mdf = Catalog.mappings(spark, maps)
@@ -338,10 +346,8 @@ class PipelineSpec extends SparkSpec {
   }
 
   test("pipeline with a file: URI root writes data and sidecar through one filesystem") {
-    val t0 = java.time.Instant.parse("2024-01-01T00:00:00Z").toEpochMilli * 1000L
-    val raw = spark.range(24).select(
-      timestamp_micros(lit(t0) + $"id" * 3600000000L).as("time"),
-      ($"id" * 1.5).as("fld"))
+    val t0 = t2024
+    val raw = hourly(24)
     val root = Files.createTempDirectory("graft-uri").toUri.toString
       .stripSuffix("/")
     assert(root.startsWith("file:"), root)
@@ -364,10 +370,8 @@ class PipelineSpec extends SparkSpec {
     // three days of hourly rows, planned onto the 1d rung: three slices
     // of one variable, so one DrsKey and one output directory
     val day = 86400L * 1000000L
-    val t0 = java.time.Instant.parse("2024-01-01T00:00:00Z").toEpochMilli * 1000L
-    val raw = spark.range(72).select(
-      timestamp_micros(lit(t0) + $"id" * 3600000000L).as("time"),
-      ($"id" * 1.5).as("fld"))
+    val t0 = t2024
+    val raw = hourly(72)
     val plan = Planner.plan(t0, t0 + 3 * day, mbPerDay = 2.0, maxSizeMb = 2.0)
     assert(plan.slices.size >= 2, plan)
     val root = Files.createTempDirectory("graft-slices").toString
@@ -416,5 +420,97 @@ class PipelineSpec extends SparkSpec {
     assert(res.isLeft)
     val st = spark.read.parquet(s"$root/_status")
     assert(st.filter($"status".startsWith("failed")).count() == 1)
+  }
+
+  test("status files from Spark's writer and from appendStatus read back as one table") {
+    val dir = Files.createTempDirectory("graft-status-mix").resolve("_status")
+      .toString
+    Seq(("old", "processed", 7L, java.time.Instant.now().toString))
+      .toDF("task_id", "status", "n_rows", "at")
+      .write.parquet(dir)
+    Sink.appendStatus(spark, dir, "new", "processed", 9L)
+    val st = spark.read.parquet(dir)
+    assert(st.schema.fields.map(f => f.name -> f.dataType.simpleString).toSeq ==
+      Seq("task_id" -> "string", "status" -> "string", "n_rows" -> "bigint",
+        "at" -> "string"), st.schema)
+    assert(st.select($"task_id", $"status", $"n_rows").as[(String, String, Long)]
+      .collect().toSet == Set(("old", "processed", 7L), ("new", "processed", 9L)))
+  }
+
+  test("concurrent appendStatus calls each land one file, with nothing left hidden") {
+    val dir = Files.createTempDirectory("graft-status-conc").resolve("_status")
+    val threads = (0 until 4).map { t =>
+      new Thread(() => (0 until 8).foreach { i =>
+        Sink.appendStatus(spark, dir.toString, s"t${t}_$i", "processed", i.toLong)
+      })
+    }
+    threads.foreach(_.start())
+    threads.foreach(_.join())
+    val st = spark.read.parquet(dir.toString)
+    assert(st.count() == 32)
+    assert(st.select($"task_id").distinct().count() == 32)
+    val names = Files.list(dir).iterator().asScala.map(_.getFileName.toString).toSeq
+    assert(names.size == 32 &&
+      names.forall(n => n.startsWith("part-") && n.endsWith(".parquet")), names)
+  }
+
+  test("a failing task after a good one logs no ERROR from the query listener bus") {
+    // an Observation registers a session-wide listener that re-throws a
+    // later query's analysis error, which ExecutionListenerBus logs as
+    // an ERROR with the full stack
+    import org.apache.logging.log4j.{Level, LogManager}
+    import org.apache.logging.log4j.core.{LogEvent, Logger => CoreLogger}
+    import org.apache.logging.log4j.core.appender.AbstractAppender
+    import org.apache.logging.log4j.core.config.Property
+    val errors = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val capture = new AbstractAppender("listener-bus-errors", null, null, true,
+        Property.EMPTY_ARRAY) {
+      override def append(e: LogEvent): Unit =
+        if (e.getLevel.isMoreSpecificThan(Level.ERROR))
+          errors.add(e.getMessage.getFormattedMessage)
+    }
+    capture.start()
+    val logger = LogManager.getLogger(
+      "org.apache.spark.sql.util.ExecutionListenerBus").asInstanceOf[CoreLogger]
+    logger.addAppender(capture)
+    try {
+      val t0 = t2024
+      val raw = hourly(24)
+      val root = Files.createTempDirectory("graft-listener").toString
+      val key = Sink.DrsKey("CMIP6", "ACME", "SPARK1", "histor", "r1i1p1f1",
+        "E1hr", "tas", "gn", "v1")
+      val good = Pipeline.Task("good", Seq("fld"), "", "", "mean",
+        t0, t0 + 24L * 3600000000L, key, Map.empty)
+      assert(Pipeline.run(spark, raw, good, root).isRight)
+      val bad = good.copy(id = "bad", inputVars = Seq("missing_col"))
+      assert(Pipeline.run(spark, raw, bad, root).isLeft)
+      org.apache.spark.sql.GraftSqlBridge.drainListenerBus(spark)
+      val st = spark.read.parquet(s"$root/_status")
+        .select($"task_id", $"status", $"n_rows").as[(String, String, Long)]
+        .collect().map(r => r._1 -> r).toMap
+      assert(st("good") == (("good", "processed", 24L)), st)
+      assert(st("bad")._2.startsWith("failed") && st("bad")._3 == 0L, st)
+    } finally {
+      logger.removeAppender(capture)
+      capture.stop()
+    }
+    assert(errors.isEmpty, errors.asScala.mkString("\n"))
+  }
+
+  test("an empty slice leaves no partition and records 0 rows") {
+    val t0 = t2024
+    val raw = hourly(24)
+    val root = Files.createTempDirectory("graft-empty").toString
+    val task = Pipeline.Task("empty", Seq("fld"), "", "", "mean",
+      t0 + 48L * 3600000000L, t0 + 72L * 3600000000L,
+      Sink.DrsKey("CMIP6", "ACME", "SPARK1", "histor", "r1i1p1f1",
+        "E1hr", "tas", "gn", "v1"), Map.empty)
+    val res = Pipeline.run(spark, raw, task, root)
+    assert(res.isRight, res)
+    assert(!Files.exists(java.nio.file.Paths.get(res.toOption.get,
+      s"period=${Sink.periodOf(task.tstartUs, task.tendUs)}")))
+    assert(spark.read.parquet(s"$root/_status")
+      .select($"status", $"n_rows").as[(String, Long)].collect().toSeq ==
+      Seq(("processed", 0L)))
   }
 }
